@@ -1324,12 +1324,9 @@ def stream_balance_rpc_tail(spark: SparkSession, sf: str) -> DataFrame:
     pipeline is source-agnostic: chain-dump micro-batches
     (stream_erc20_balance_upsert) and live-RPC log micro-batches settle
     to the same ledger bit-for-bit.  max_blocks_per_batch=800 over the
-    2,400-block fixture makes a REAL 3-generation merge under the
-    incremental-batch schedule (drain_runs=3: one availableNow run per
-    rate-limited micro-batch, each resuming the shared checkpoint — a
-    genuine restart-recovery per batch); cost per batch is one filtered
-    eth_getLogs (no block bodies, no receipts —
-    TestBalanceUpsertRpcTail pins the count)."""
+    2,400-block fixture makes a REAL 3-generation merge in one drained
+    query; cost per batch is one filtered eth_getLogs (no block bodies,
+    no receipts — TestBalanceUpsertRpcTail pins the count)."""
     from presto_ethereum_spark.sources.decode import (
         erc20_transfer_deltas_from_logs,
     )
@@ -1351,7 +1348,6 @@ def stream_balance_rpc_tail(spark: SparkSession, sf: str) -> DataFrame:
         "",
         source=stream,
         deltas_fn=erc20_transfer_deltas_from_logs,
-        drain_runs=3,
     )
 
 
@@ -2838,14 +2834,14 @@ def rel_window_distinct_range(spark: SparkSession, sf: str) -> DataFrame:
 )
 def stream_session_window(spark: SparkSession, sf: str) -> DataFrame:
     """NATIVE streaming session windows (F.session_window + watermark, run
-    via availableNow in complete mode) — the engine-delegated twin of
+    to completion in complete mode) — the engine-delegated twin of
     stream_sessionized's custom applyInPandasWithState operator, proving
     the two sessionization paths (JVM state-store interval merge vs
     Arrow-batch Python state) settle to the SAME gap sessions the batch
     lag/cumsum closed form defines.  Session end is last-event + gap in
     Spark's native definition; the operator subtracts the gap back out so
     all three implementations share one column contract.  Complete mode
-    on purpose: availableNow's final watermark would hold back sessions
+    on purpose: the drain's final watermark would hold back sessions
     ending within the delay in append mode (streaming/events.
     run_session_window)."""
     from presto_ethereum_spark.streaming.events import run_session_window
@@ -2866,7 +2862,7 @@ def stream_session_window(spark: SparkSession, sf: str) -> DataFrame:
 )
 def stream_windowed_counts(spark: SparkSession, sf: str) -> DataFrame:
     """Structured Streaming: event-time tumbling windows with watermark, run
-    to completion via availableNow into a memory sink — the streaming result
+    to completion into a memory sink — the streaming result
     must equal the equivalent batch aggregation (streaming/events.py)."""
     from presto_ethereum_spark.streaming.events import run_windowed_counts
 
@@ -4156,7 +4152,7 @@ def doc_winnow_fps(spark: SparkSession, sf: str) -> DataFrame:
 )
 def stream_dedup_keys(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming exact dedup: dropDuplicates over projected keys, run to
-    completion with availableNow — must equal batch SELECT DISTINCT under
+    completion — must equal batch SELECT DISTINCT under
     any arrival order (streaming/events.py)."""
     from presto_ethereum_spark.streaming.events import run_stream_dedup
 
@@ -4206,7 +4202,7 @@ def doc_winnow_overlap(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def stream_static_join(spark: SparkSession, sf: str) -> DataFrame:
-    """Stream-static enrichment join run to completion (availableNow): the
+    """Stream-static enrichment join run to completion: the
     customer dimension broadcasts per micro-batch, so the streaming result
     must equal the batch join+aggregate exactly (streaming/events.py)."""
     from presto_ethereum_spark.streaming.events import run_stream_static_join
@@ -4231,7 +4227,7 @@ def stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
     """Watermarked STREAM-STREAM join run to completion: clicks matched to
     the same user's purchases within an hour — both sides watermarked and
     the interval condition bounds the buffered state (streaming/events.py:
-    stream_stream_join).  The settled availableNow result must equal the
+    stream_stream_join).  The settled result must equal the
     batch interval self-join exactly."""
     from presto_ethereum_spark.streaming.events import run_stream_stream_join
 
@@ -6848,23 +6844,18 @@ def stream_chain_gas(spark: SparkSession, sf: str) -> DataFrame:
     """Structured Streaming over the custom chain-tail source
     (streaming/chain.py): block micro-batches with exact offset/replay
     semantics aggregate into per-100-block gas telemetry; the settled
-    availableNow result must equal the batch aggregation of the block
+    drained result must equal the batch aggregation of the block
     table — the oracle checks a *custom Python streaming source* end to
     end.  Gas sums ride DECIMAL(18,0) (the values are integer-valued
     doubles), so the answer is micro-batch-partitioning independent.
-    r11: graded as THREE rate-limited micro-batches under the
-    incremental-batch schedule (drain_runs=3, 800 blocks/batch over the
-    2,400-block fixture) — each drain resumes the aggregation's state
-    store from the shared checkpoint, so the gate now also proves
-    stateful restart-recovery on the custom source, not just a
-    single-batch pass."""
+    Graded as THREE rate-limited micro-batches (800 blocks/batch over the
+    2,400-block fixture) in one query."""
     from presto_ethereum_spark.streaming.chain import run_chain_gas_buckets
 
     return run_chain_gas_buckets(
         spark,
         str(ETH / "chain_blocks.parquet"),
         max_per_batch=800,
-        drain_runs=3,
     )
 
 
@@ -6886,9 +6877,7 @@ def stream_chain_gas_partitioned(spark: SparkSession, sf: str) -> DataFrame:
     the high-rate catch-up mode: per trigger, the batch range splits into
     blocks_per_partition chunks fetched in parallel on executors instead
     of serially on the driver).  Same offsets, same oracle, different
-    physical read path; r11: same 3-drain incremental-batch schedule as
-    stream_chain_gas, so the executor-side reader's offset floor +
-    state-store recovery are gate-proven too."""
+    physical read path; same three micro-batches as stream_chain_gas."""
     from presto_ethereum_spark.streaming.chain import run_chain_gas_buckets
 
     return run_chain_gas_buckets(
@@ -6896,7 +6885,6 @@ def stream_chain_gas_partitioned(spark: SparkSession, sf: str) -> DataFrame:
         str(ETH / "chain_blocks.parquet"),
         reader_mode="partitioned",
         max_per_batch=800,
-        drain_runs=3,
     )
 
 
@@ -8642,6 +8630,7 @@ def stream_manifest_sink(spark: SparkSession, sf: str) -> DataFrame:
     the hash)."""
     import tempfile
 
+    from presto_ethereum_spark.streaming import drain
     from presto_ethereum_spark.streaming.events import _events_source
     from presto_ethereum_spark.streaming.sink import (
         JsonlManifestDataSource,
@@ -8650,16 +8639,13 @@ def stream_manifest_sink(spark: SparkSession, sf: str) -> DataFrame:
 
     spark.dataSource.register(JsonlManifestDataSource)
     out = tempfile.mkdtemp(prefix="manifest_sink_")
-    q = (
+    drain(
         _events_source(spark, sf)
         .select("event_id", "user_id", "t_us", "event_type")
         .writeStream.format("jsonl_manifest")
         .option("path", out)
         .option("checkpointLocation", f"{out}/_chk")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     got = read_manifested(
         spark, out, "event_id long, user_id long, t_us long, event_type string"
     ).localCheckpoint(eager=True)
@@ -9097,14 +9083,10 @@ def stream_erc20_tail(spark: SparkSession, sf: str) -> DataFrame:
     block range (the bulk path, no block bodies, no receipts), decoded by
     the same per-log rules as the batch scan.  Aggregated per token; must
     equal the golden batch aggregation exactly (%.6e canonicalization
-    absorbs fp summation order, as in eth_erc20_movement).  r11: graded
-    as THREE rate-limited micro-batches (drain_runs=3 x 800 blocks) under
-    the incremental-batch schedule — each availableNow run is one bulk
-    getLogs + a state-store resume from the shared checkpoint."""
-    import shutil
-    import tempfile
-    import uuid
-
+    absorbs fp summation order, as in eth_erc20_movement).  Graded as
+    THREE rate-limited micro-batches (800 blocks each), each one bulk
+    getLogs, in one drained query."""
+    from presto_ethereum_spark.streaming import settle_to_memory
     from presto_ethereum_spark.streaming.chain import EthereumStreamDataSource
 
     spark.dataSource.register(EthereumStreamDataSource)
@@ -9119,36 +9101,7 @@ def stream_erc20_tail(spark: SparkSession, sf: str) -> DataFrame:
         F.format_string("%.6e", F.sum("erc20_value")).alias("total_value"),
         F.count("*").alias("n_transfers"),
     )
-    chk = tempfile.mkdtemp(prefix="erc20_tail_chk_")
-    try:
-        out = None
-        for i in range(3):
-            # one sink per drain; keep the last non-empty settled table
-            # (an exhausted-source drain fires zero triggers and would
-            # otherwise clobber the state with its empty view) — the
-            # run_chain_gas_buckets drain discipline
-            sink = f"stream_erc20_{uuid.uuid4().hex[:8]}_{i}"
-            q_ = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", chk)
-                .start()
-            )
-            q_.awaitTermination()
-            cur = spark.table(sink).localCheckpoint(eager=True)
-            spark.catalog.dropTempView(sink)
-            if cur.take(1):
-                out = cur
-        if out is None:
-            # all drains settled empty (empty/exhausted source): hand back
-            # an empty frame with the agg schema, not None — the
-            # run_chain_gas_buckets fallback discipline
-            out = spark.createDataFrame([], agg.schema)
-        return out
-    finally:
-        shutil.rmtree(chk, ignore_errors=True)
+    return settle_to_memory(spark, agg, "stream_erc20", "complete")
 
 
 @q("doc_bpe_train", None)
@@ -10067,7 +10020,7 @@ def rel_market_share(spark: SparkSession, sf: str) -> DataFrame:
 def stream_trending_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Per-window trending leaderboard over the STREAMING windowed counts
     (streaming/events.run_trending_topk): tumbling event-time windows
-    drain availableNow, then each window's top-3 event types rank
+    drain, then each window's top-3 event types rank
     deterministically — the settled stream must equal the batch windowed
     rank exactly."""
     from presto_ethereum_spark.streaming.events import run_trending_topk
@@ -10606,7 +10559,7 @@ def doc_collocations_pmi(spark: SparkSession, sf: str) -> DataFrame:
 def stream_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming ingest-time data-quality gate (streaming/events.
     quality_gate_stream): the expectation rules run as conditional counts
-    inside the streaming global aggregation, settled via availableNow —
+    inside the streaming global aggregation, settled by a drain —
     counts are additive so the result equals the batch suite under ANY
     micro-batch split; state is O(rules) counters."""
     from presto_ethereum_spark.streaming.events import run_quality_gate

@@ -54,6 +54,7 @@ from pyspark.sql.types import (
 
 from presto_ethereum_spark.schemas import SCHEMAS
 from presto_ethereum_spark.sources.rpc import make_transport
+from presto_ethereum_spark.streaming import drain, settle_to_memory
 
 # Raw-log wire shape (streaming-only table=log; NOT in the reference's
 # 3-table metadata, so kept out of the SCHEMAS registry): one row per
@@ -278,34 +279,20 @@ class EthereumStreamDataSource(DataSource):
         return EthereumPartitionedStreamReader(dict(self.options))
 
 
-def run_chain_gas_buckets(
+def chain_gas_stream(
     spark,
     path: str,
     bucket_blocks: int = 100,
     max_per_batch: int = 4000,
     reader_mode: str = "simple",
-    drain_runs: int = 1,
 ):
     """Streaming gas telemetry over the chain tail: readStream on the
-    ethereum-stream source, aggregated per ``bucket_blocks``-block bucket,
-    run to completion (availableNow) into a memory sink.
+    ethereum-stream source, aggregated per ``bucket_blocks``-block bucket.
 
     The standing monitor shape for a live node: block micro-batches fold
     into a bounded per-bucket state (complete mode over a small bucket
     domain); gas sums go through DECIMAL so the streamed result equals the
-    batch aggregation exactly under any micro-batch partitioning.
-
-    ``drain_runs`` > 1 applies the incremental-batch schedule (see
-    run_balance_upsert): Spark wraps Python stream sources lacking
-    SupportsTriggerAvailableNow so one availableNow run drains exactly one
-    rate-limited micro-batch; re-running against the SAME checkpoint
-    resumes both the source offset AND the aggregation's state store —
-    each drain is a genuine stateful-query restart-recovery, and the
-    settled table must still equal the batch aggregation."""
-    import tempfile
-    import shutil
-    import uuid
-
+    batch aggregation exactly under any micro-batch partitioning."""
     from pyspark.sql import functions as F
 
     spark.dataSource.register(EthereumStreamDataSource)
@@ -316,56 +303,32 @@ def run_chain_gas_buckets(
         .option("reader_mode", reader_mode)
         .load()
     )
-    agg = (
-        stream.groupBy(
-            F.expr(f"CAST(block_number DIV {bucket_blocks} AS INT)").alias(
-                "bucket"
-            )
-        )
-        .agg(
-            F.count("*").alias("n_blocks"),
-            F.sum(F.col("block_gasused").cast("decimal(18,0)"))
-            .cast("double")
-            .alias("total_gas_used"),
-            F.max("block_gaslimit").alias("max_gas_limit"),
-        )
+    return stream.groupBy(
+        F.expr(f"CAST(block_number DIV {bucket_blocks} AS INT)").alias("bucket")
+    ).agg(
+        F.count("*").alias("n_blocks"),
+        F.sum(F.col("block_gasused").cast("decimal(18,0)"))
+        .cast("double")
+        .alias("total_gas_used"),
+        F.max("block_gaslimit").alias("max_gas_limit"),
     )
-    chk = tempfile.mkdtemp(prefix="chain_gas_chk_")
-    try:
-        out = None
-        for i in range(max(1, drain_runs)):
-            # one sink PER drain: a drain that finds the source exhausted
-            # fires zero triggers and leaves ITS table empty — reusing one
-            # name would let that empty table clobber the settled state
-            # (complete mode rewrites the registered view per query run).
-            # Keeping the last non-empty output makes drain_runs
-            # over-provisionable.
-            sink = f"stream_chain_gas_{uuid.uuid4().hex[:8]}_{i}"
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", chk)
-                .start()
-            )
-            q.awaitTermination()
-            # pin the result and DROP the uuid-named sink table: repeated
-            # calls in one session (bench loops, retries) must not
-            # accumulate cached result tables
-            cur = spark.table(sink).localCheckpoint(eager=True)
-            spark.catalog.dropTempView(sink)
-            if cur.take(1):
-                out = cur
-        if out is None:
-            out = spark.createDataFrame(
-                [],
-                "bucket int, n_blocks long, total_gas_used double,"
-                " max_gas_limit long",
-            )
-        return out
-    finally:
-        shutil.rmtree(chk, ignore_errors=True)
+
+
+def run_chain_gas_buckets(
+    spark,
+    path: str,
+    bucket_blocks: int = 100,
+    max_per_batch: int = 4000,
+    reader_mode: str = "simple",
+):
+    """Drain :func:`chain_gas_stream` into a memory sink and return the
+    settled per-bucket table."""
+    return settle_to_memory(
+        spark,
+        chain_gas_stream(spark, path, bucket_blocks, max_per_batch, reader_mode),
+        "stream_chain_gas",
+        "complete",
+    )
 
 
 def rescan_reorged(spark, ingested, options: dict, depth: int = 64):
@@ -420,7 +383,6 @@ def run_balance_upsert(
     source=None,
     split_ranges: int = 3,
     deltas_fn=None,
-    drain_runs: int = 1,
     state_root: str | None = None,
     state_spec: dict | None = None,
 ):
@@ -580,23 +542,11 @@ def run_balance_upsert(
             if out not in gens:
                 gens.append(out)
 
-        # drain_runs > 1 is the INCREMENTAL-BATCH schedule for rate-limited
-        # sources: Spark wraps a Python stream source that lacks
-        # SupportsTriggerAvailableNow in AvailableNowDataStreamWrapper,
-        # which captures latestOffset ONCE at query start — so a reader
-        # that rate-limits to max_blocks_per_batch drains exactly one
-        # micro-batch per availableNow run.  Re-running against the SAME
-        # checkpoint resumes from the committed offset (a real
-        # restart-recovery per run) until the source is exhausted; each
-        # run's batch merges into the same generation chain.
-        for _ in range(max(1, drain_runs)):
-            q = (
-                source.writeStream.foreachBatch(merge_batch)
-                .trigger(availableNow=True)
-                .option("checkpointLocation", f"{root}/_chk")
-                .start()
+        drain(
+            source.writeStream.foreachBatch(merge_batch).option(
+                "checkpointLocation", f"{root}/_chk"
             )
-            q.awaitTermination()
+        )
         if not gens:
             return spark.createDataFrame([], spec["empty_schema"])
         return (
@@ -620,7 +570,7 @@ def run_balance_restart(
     """GENUINE KILL-AND-RESUME for the balance pipeline (VERDICT r11 #2):
 
     1. stage the first ``kill_after`` block-range files, run the pipeline
-       with a durable ``state_root`` until availableNow drains them;
+       with a durable ``state_root`` until the drain empties them;
     2. KILL — the query object and every piece of driver-side Python
        state (the in-memory generation list) are discarded; only the
        on-disk checkpoint + generation chain under the state root remain;

@@ -1,8 +1,8 @@
 """Windowed streaming aggregation over the events table.
 
 The canonical Structured Streaming shape: file stream -> event-time window
-with watermark -> stateful aggregation.  ``run_windowed_counts`` executes it
-with ``availableNow`` (process-everything-then-stop) into a memory sink and
+with watermark -> stateful aggregation.  ``run_windowed_counts`` drains it
+(process-everything-then-stop, ``streaming.drain``) into a memory sink and
 returns the result as a plain DataFrame, which makes the streaming path
 batch-comparable: the driver's DuckDB oracle checks it like any other query
 (tumbling windows are floor(ts / width)).
@@ -14,8 +14,6 @@ drop deterministically.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -26,6 +24,9 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from presto_ethereum_spark.streaming import drain, settle_to_memory
+
 
 def _events_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream over ``events.parquet`` with the schema taken from the
@@ -111,7 +112,7 @@ def sessionized_stream(
     Per user the state carries (last event time, next session id, and the
     still-open session's id/start/count), so sessions that straddle
     micro-batches emit exactly once with correct bounds.  The final open
-    session of each batch also emits (marked complete) so availableNow runs
+    session of each batch also emits (marked complete) so drained runs
     settle to the batch-equivalent answer — in a continuous deployment you
     would instead hold it and emit on event-time timeout.
     """
@@ -170,30 +171,10 @@ def sessionized_stream(
     )
 
 
-def _settle_to_memory(
-    spark: SparkSession, stream_df: DataFrame, prefix: str, output_mode: str
-) -> DataFrame:
-    """Run a stream to completion (availableNow) into a uuid-named memory
-    sink, pin the settled result, and DROP the sink — repeated calls in one
-    session (bench loops, retries) must not accumulate cached tables."""
-    sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = spark.table(sink).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(sink)
-    return out
-
-
 def run_sessionized(
     spark: SparkSession, sf_dir: str, gap_us: int = 3_600_000_000
 ) -> DataFrame:
-    return _settle_to_memory(
+    return settle_to_memory(
         spark, sessionized_stream(spark, sf_dir, gap_us), "stream_sessions", "append"
     )
 
@@ -201,9 +182,8 @@ def run_sessionized(
 def run_windowed_counts(
     spark: SparkSession, sf_dir: str, window: str = "1 hour"
 ) -> DataFrame:
-    """Run the stream to completion (availableNow) into a memory sink and
-    return the settled result."""
-    return _settle_to_memory(
+    """Drain the stream into a memory sink and return the settled result."""
+    return settle_to_memory(
         spark, windowed_counts_stream(spark, sf_dir, window),
         "stream_counts", "complete",
     )
@@ -225,7 +205,7 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _settle_to_memory(
+    return settle_to_memory(
         spark, dedup_stream(spark, sf_dir), "stream_dedup", "append"
     )
 
@@ -256,7 +236,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _settle_to_memory(
+    return settle_to_memory(
         spark, stream_static_join(spark, sf_dir), "stream_enrich", "complete"
     )
 
@@ -319,7 +299,7 @@ def stream_stream_join(
 
 
 def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _settle_to_memory(
+    return settle_to_memory(
         spark, stream_stream_join(spark, sf_dir), "stream_ss_join", "append"
     )
 
@@ -349,7 +329,7 @@ def ivf_ingest_stream(
 
 
 def run_ivf_ingest(spark: SparkSession, sf_dir: str, centroids: list) -> DataFrame:
-    return _settle_to_memory(
+    return settle_to_memory(
         spark, ivf_ingest_stream(spark, sf_dir, centroids), "stream_ivf", "complete"
     )
 
@@ -401,7 +381,7 @@ def run_foreachbatch_upsert(
     table on the key so generations co-partition.
 
     Returns the settled state ``(user_id, last_t_us, last_event_id,
-    last_value)`` after an ``availableNow`` run over the events file.
+    last_value)`` after draining the events file.
     ``source`` overrides the input stream (must carry user_id / t_us /
     event_id / value) — tests use a multi-file source to force the
     multi-batch merge path.
@@ -442,14 +422,11 @@ def run_foreachbatch_upsert(
         if out not in gens:
             gens.append(out)
 
-    q = (
+    drain(
         (source if source is not None else _events_source(spark, sf_dir))
         .writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
         .option("checkpointLocation", f"{root}/_chk")
-        .start()
     )
-    q.awaitTermination()
     if not gens:
         schema = "user_id long, last_t_us long, last_event_id long, last_value double"
         return spark.createDataFrame([], schema)
@@ -517,7 +494,7 @@ def quality_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _settle_to_memory(
+    return settle_to_memory(
         spark, quality_gate_stream(spark, sf_dir), "stream_quality", "complete"
     )
 
@@ -557,7 +534,7 @@ def windowed_distinct_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_windowed_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _settle_to_memory(
+    return settle_to_memory(
         spark,
         windowed_distinct_stream(spark, sf_dir),
         "stream_wdistinct",
@@ -598,7 +575,7 @@ def kmv_distinct_stream(
     closes for batch: per micro-batch the window's state merges the
     batch's hashes and keeps the k smallest — KMV merge is commutative
     and associative (the k smallest of a union are among each part's k
-    smallest), so the settled availableNow result is BIT-IDENTICAL to
+    smallest), so the settled drained result is BIT-IDENTICAL to
     the batch KMV under any micro-batch split.
 
     Hashes are computed JVM-side (dedup.hash60: 60-bit md5 prefix) before
@@ -677,7 +654,7 @@ def run_kmv_distinct(
     """Settle the KMV stream and keep the last emit per window (max of the
     monotone n_events counter — one row per window whatever the
     micro-batch split)."""
-    settled = _settle_to_memory(
+    settled = settle_to_memory(
         spark, kmv_distinct_stream(spark, sf_dir, k, source), "stream_kmv", "append"
     )
     w = Window.partitionBy("window_start").orderBy(F.desc("n_events"))
@@ -731,7 +708,7 @@ def value_histogram_stream(
 
     State per open window is 64 long counters + a row count; the merge
     is elementwise sum — commutative and associative — so the settled
-    availableNow result is BIT-IDENTICAL to the batch histogram under
+    drained result is BIT-IDENTICAL to the batch histogram under
     any micro-batch split, and every graded column (bucket ids, exact
     power-of-two bounds, in-bucket counts) is integer hash-gated.  Per
     emit: p50/p90 target rank = (p*n + 99) div 100, bucket found by
@@ -817,7 +794,7 @@ def run_value_histogram(
 ) -> DataFrame:
     """Settle the histogram stream; keep the last emit per window (max of
     the monotone n_events counter)."""
-    settled = _settle_to_memory(
+    settled = settle_to_memory(
         spark,
         value_histogram_stream(spark, sf_dir, source),
         "stream_vhist",
@@ -953,7 +930,7 @@ def run_heavy_hitters(
     linear scan — at 100 TB the verify prices one pass over the closed
     window's slice (a log replay in a real deployment), never a full
     groupBy of the corpus."""
-    settled = _settle_to_memory(
+    settled = settle_to_memory(
         spark,
         heavy_hitters_stream(spark, sf_dir, k, source),
         "stream_mg",
@@ -1048,11 +1025,11 @@ def run_session_window(
     source: DataFrame | None = None,
 ) -> DataFrame:
     """Settle the native session-window stream.  COMPLETE mode on purpose:
-    availableNow's final watermark stops delay-behind-max-event-time, so
+    the drain's final watermark stops delay-behind-max-event-time, so
     append mode would hold back sessions ending inside the last watermark
     window (measured: 903 of 906 sessions at sf0.001) — complete mode
     emits the full settled state, making the result batch-equal."""
-    return _settle_to_memory(
+    return settle_to_memory(
         spark,
         session_window_stream(spark, sf_dir, source),
         "stream_swin",
@@ -1172,7 +1149,7 @@ def run_ewma(
     """Settle the EWMA stream, keep the last emit per user (max of the
     monotone n_seen counter), and derive the graded double from the exact
     BIGINT rational — the identical division sequence the oracle runs."""
-    settled = _settle_to_memory(
+    settled = settle_to_memory(
         spark, ewma_stream(spark, sf_dir, source), "stream_ewma", "append"
     )
     w = Window.partitionBy("key").orderBy(F.desc("n_seen"))
@@ -1297,7 +1274,7 @@ def run_funnel(
     source: DataFrame | None = None,
 ) -> DataFrame:
     """Settle the funnel stream and keep the last emit per user."""
-    settled = _settle_to_memory(
+    settled = settle_to_memory(
         spark, funnel_stream(spark, sf_dir, source), "stream_funnel", "append"
     )
     w = Window.partitionBy("user_id").orderBy(F.desc("n_seen"))

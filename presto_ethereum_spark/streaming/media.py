@@ -18,6 +18,8 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from presto_ethereum_spark.streaming import drain
+
 
 def run_png_ingest(spark, path: str, splits: int = 3):
     """Stream ``path`` (an images parquet with media_id + png columns) as
@@ -55,17 +57,14 @@ def run_png_ingest(spark, path: str, splits: int = 3):
         def decode_batch(batch_df, batch_id: int) -> None:
             png_decode_stats(batch_df).write.mode("append").parquet(out)
 
-        q = (
+        drain(
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .option("recursiveFileLookup", "true")
             .parquet(f"{root}/input")
             .writeStream.foreachBatch(decode_batch)
-            .trigger(availableNow=True)
             .option("checkpointLocation", f"{root}/_chk")
-            .start()
         )
-        q.awaitTermination()
         return spark.read.parquet(out).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)

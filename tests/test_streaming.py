@@ -12,6 +12,27 @@ from tests.conftest import ETH_FIXTURES
 CHAIN = str(ETH_FIXTURES / "chain_blocks.parquet")
 
 
+@pytest.fixture
+def started_queries(monkeypatch):
+    """Every streaming query started during the test, in start order."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    started = []
+    real = DataStreamWriter.start
+
+    def start(self, *args, **kwargs):
+        started.append(real(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    return started
+
+
+def _data_batches(q) -> int:
+    """Micro-batches of ``q`` that read at least one row."""
+    return sum(1 for p in q.recentProgress if p.numInputRows > 0)
+
+
 def test_chain_stream_ingests_all_blocks(spark, chain_source, tmp_path):
     # availableNow falls back to a single micro-batch for Python streaming
     # sources, so size the batch to cover the chain for the equality check
@@ -39,7 +60,7 @@ def test_chain_stream_ingests_all_blocks(spark, chain_source, tmp_path):
 
 
 def test_chain_stream_multi_batch_progress(spark, tmp_path):
-    import time
+    from presto_ethereum_spark.streaming import drain
 
     spark.dataSource.register(EthereumStreamDataSource)
     stream = (
@@ -49,19 +70,12 @@ def test_chain_stream_multi_batch_progress(spark, tmp_path):
         .option("max_blocks_per_batch", 400)
         .load()
     )
-    q = (
+    q = drain(
         stream.writeStream.format("memory")
         .queryName("chain_tail_mb")
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt_mb"))
-        .start()
     )
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        if spark.table("chain_tail_mb").count() >= 2400:
-            break
-        time.sleep(1)
-    q.stop()
     n = spark.table("chain_tail_mb").count()
     assert n == 2400, n
     # multiple micro-batches actually ran (offsets advanced incrementally)
@@ -582,18 +596,17 @@ class TestErc20StreamTable:
     def test_multi_batch_tail_equals_golden(self, spark, tmp_path):
         """Micro-batch cadence (400 blocks/trigger): the tailing path must
         converge to the same row set as one big batch."""
-        import time
         import uuid
 
+        from presto_ethereum_spark.streaming import drain
         from presto_ethereum_spark.streaming.chain import (
             EthereumStreamDataSource,
         )
 
         spark.dataSource.register(EthereumStreamDataSource)
         golden = spark.read.parquet("fixtures/eth/erc20.parquet")
-        want = golden.count()
         sink = "erc20mb_" + uuid.uuid4().hex[:8]
-        q = (
+        q = drain(
             spark.readStream.format("ethereum-stream")
             .option("path", "fixtures/eth/chain_blocks.parquet")
             .option("table", "erc20")
@@ -603,14 +616,7 @@ class TestErc20StreamTable:
             .queryName(sink)
             .outputMode("append")
             .option("checkpointLocation", str(tmp_path / "erc20_ckpt"))
-            .start()
         )
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if spark.table(sink).count() >= want:
-                break
-            time.sleep(1)
-        q.stop()
         got = spark.table(sink)
         assert got.exceptAll(golden).count() == 0
         assert golden.exceptAll(got).count() == 0
@@ -1660,12 +1666,16 @@ class TestBalanceUpsertRpcTail:
             self.counts["get_logs"] += 1
             return self.inner.get_logs(start, end, topic0, addresses)
 
-    def test_settled_ledger_matches_batch_and_dump_stream(self, spark):
+    def test_settled_ledger_matches_batch_and_dump_stream(
+        self, spark, started_queries
+    ):
         from presto_ethereum_spark.plans.battery import queries
 
         qs = queries()
         sf = "/root/testdata/sf0.001"
         got = sorted(map(tuple, qs["stream_balance_rpc_tail"](spark, sf).collect()))
+        # one drained query reads all three 800-block micro-batches
+        assert [_data_batches(q) for q in started_queries] == [3]
         want = sorted(map(tuple, qs["eth_erc20_balances"](spark, sf).collect()))
         assert got == want
 
@@ -1695,32 +1705,84 @@ class TestBalanceUpsertRpcTail:
         assert counting.counts == {"get_blocks": 0, "get_logs": 3}
 
 
-class TestDrainOverProvisioning:
-    def test_extra_drains_do_not_clobber_settled_state(self, spark):
-        """drain_runs beyond the available micro-batches must be a no-op:
-        an exhausted-source availableNow run fires zero triggers, and the
-        per-drain sink discipline keeps the last NON-empty settled table
-        instead of letting the empty view win."""
+class TestChainGasDrain:
+    """The chain-tail gas aggregate: one drained query reads every
+    rate-limited micro-batch, and its state store survives a restart."""
+
+    def test_three_batches_equal_one_batch(self, spark, started_queries):
+        from presto_ethereum_spark.plans.battery import queries
         from presto_ethereum_spark.streaming.chain import run_chain_gas_buckets
 
-        path = "fixtures/eth/chain_blocks.parquet"
+        # the graded entry: 800 blocks per batch over the 2,400-block chain
+        got = sorted(map(tuple, queries()["stream_chain_gas"](spark, "").collect()))
         want = sorted(
             map(
                 tuple,
-                run_chain_gas_buckets(
-                    spark, path, max_per_batch=4000, drain_runs=1
-                ).collect(),
-            )
-        )
-        got = sorted(
-            map(
-                tuple,
-                run_chain_gas_buckets(
-                    spark, path, max_per_batch=800, drain_runs=6
-                ).collect(),
+                run_chain_gas_buckets(spark, CHAIN, max_per_batch=4000).collect(),
             )
         )
         assert got == want and len(got) > 0
+        assert [_data_batches(q) for q in started_queries] == [3, 1]
+
+    @pytest.mark.parametrize(
+        "name", ["stream_chain_gas_partitioned", "stream_erc20_tail"]
+    )
+    def test_graded_entry_is_one_query(self, spark, started_queries, name):
+        import sys
+
+        import duckdb
+
+        from presto_ethereum_spark.plans import battery
+        from tests.conftest import REPO
+
+        if str(REPO / "scripts") not in sys.path:
+            sys.path.insert(0, str(REPO / "scripts"))
+        from check_battery import compare
+
+        got = battery.queries()[name](spark, "")
+        assert [_data_batches(q) for q in started_queries] == [3]
+        assert compare(name, got, duckdb.sql(battery.oracles()[name])) == "OK"
+
+    def test_state_store_restart(self, spark, tmp_path):
+        """One availableNow query reads exactly one 800-block batch (Python
+        sources lack SupportsTriggerAvailableNow); a drained query on the
+        same checkpoint then resumes the offset AND the bucket state for
+        the other two, and settles to the batch aggregation."""
+        from presto_ethereum_spark.streaming import drain
+        from presto_ethereum_spark.streaming.chain import chain_gas_stream
+
+        agg = chain_gas_stream(spark, CHAIN, max_per_batch=800)
+        chk = str(tmp_path / "chk")
+
+        def writer(sink):
+            return (
+                agg.writeStream.format("memory")
+                .queryName(sink)
+                .outputMode("complete")
+                .option("checkpointLocation", chk)
+            )
+
+        first = writer("gas_first").trigger(availableNow=True).start()
+        first.awaitTermination()
+        resumed = drain(writer("gas_resumed"))
+        assert [_data_batches(q) for q in (first, resumed)] == [1, 2]
+
+        want = {}
+        for r in spark.read.parquet(str(ETH_FIXTURES / "block.parquet")).collect():
+            n, gas, top = want.get(r.block_number // 100, (0, 0, r.block_gaslimit))
+            want[r.block_number // 100] = (
+                n + 1,
+                gas + int(r.block_gasused),
+                max(top, r.block_gaslimit),
+            )
+        got = {
+            r.bucket: (r.n_blocks, r.total_gas_used, r.max_gas_limit)
+            for r in spark.table("gas_resumed").collect()
+        }
+        assert got == {b: (n, float(g), top) for b, (n, g, top) in want.items()}
+        spark.catalog.dropTempView("gas_first")
+        spark.catalog.dropTempView("gas_resumed")
+
 
 class TestBalanceRestartR13:
     """r13 additions to the balance-restart family (placed in their own
