@@ -1604,32 +1604,23 @@ def stream_u256_balance_upsert(spark: SparkSession, sf: str) -> DataFrame:
     exact-uint256 representation AND the mergeable-state streaming
     algebra, graded against an independent DuckDB HUGEINT recompute on
     values up to within 2^16 of uint256-max.  The graded run streams the
-    log fixture as THREE pmod-staged micro-batches
-    (maxFilesPerTrigger=1), a real multi-generation merge."""
+    log fixture as THREE block-range micro-batches, a real
+    multi-generation merge."""
     import shutil
     import tempfile
 
     from presto_ethereum_spark.sources.decode import erc20_transfer_deltas_u256
+    from presto_ethereum_spark.streaming import staged_stream
     from presto_ethereum_spark.streaming.chain import (
         run_balance_upsert,
         u256_state_spec,
     )
 
     logs = spark.read.parquet(str(ETH / "u256_logs.parquet"))
-    schema = logs.schema
     zero = "0x" + "0" * 40
     root = tempfile.mkdtemp(prefix="u256_stream_")
     try:
-        for i in range(3):
-            logs.where(F.pmod(F.col("blocknumber"), F.lit(3)) == i).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{root}/in/part_{i}")
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(f"{root}/in")
-        )
+        src = staged_stream(logs, "blocknumber", 3, root)
         return run_balance_upsert(
             spark,
             str(ETH / "u256_logs.parquet"),

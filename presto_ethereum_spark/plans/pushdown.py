@@ -189,18 +189,25 @@ def ranges_from_filters(
     return acc
 
 
+def _upto(start: int, end: int) -> list[BlockRange]:
+    """The closed range ``[start, end]``; an end below 1 matches no valid
+    block and is the empty list, never ``BlockRange(_, OPEN_END)`` (end
+    = -1 IS the unbounded sentinel and would scan the whole chain)."""
+    return [BlockRange(start, end)] if end >= 1 else []
+
+
 def _number_ranges(f: Filter) -> list[BlockRange]:
     v = getattr(f, "value", None)
     if isinstance(f, EqualTo) and isinstance(v, int):
-        return [BlockRange(v, v)]
+        return _upto(v, v)
     if isinstance(f, GreaterThan) and isinstance(v, int):
         return [BlockRange(v + 1, OPEN_END)]  # ABOVE bound: value + 1
     if isinstance(f, GreaterThanOrEqual) and isinstance(v, int):
         return [BlockRange(v, OPEN_END)]  # EXACTLY bound
     if isinstance(f, LessThan) and isinstance(v, int):
-        return [BlockRange(1, v - 1)]  # BELOW bound: value - 1
+        return _upto(1, v - 1)  # BELOW bound: value - 1
     if isinstance(f, LessThanOrEqual) and isinstance(v, int):
-        return [BlockRange(1, v)]
+        return _upto(1, v)
     if isinstance(f, In):
         vals = sorted({x for x in f.value if isinstance(x, int)})
         if vals:
@@ -209,10 +216,9 @@ def _number_ranges(f: Filter) -> list[BlockRange]:
             runs, lo = [], vals[0]
             for prev, cur in zip(vals, vals[1:]):
                 if cur != prev + 1:
-                    runs.append(BlockRange(lo, prev))
+                    runs += _upto(lo, prev)
                     lo = cur
-            runs.append(BlockRange(lo, vals[-1]))
-            return runs
+            return runs + _upto(lo, vals[-1])
     return [FULL_CHAIN]
 
 
@@ -359,18 +365,15 @@ def ranges_from_sql(pred: str) -> list[BlockRange]:
         if not isinstance(n, int):
             raise ValueError(f"non-integer comparison value on {col}: {n!r}")
         if op in ("=", "=="):
-            return [BlockRange(n, n)]
+            return _upto(n, n)
         if op == ">":
             return [BlockRange(n + 1, OPEN_END)]
         if op == ">=":
             return [BlockRange(n, OPEN_END)]
         if op == "<":
-            # n <= 1 matches no valid block; an empty LIST is the correct
-            # zero (n-1 = 0 would collide with the OPEN_END=-1 sentinel
-            # family and scan the whole chain)
-            return [BlockRange(1, n - 1)] if n > 1 else []
+            return _upto(1, n - 1)
         if op == "<=":
-            return [BlockRange(1, n)] if n >= 1 else []
+            return _upto(1, n)
         if op in ("!=", "<>"):
             # the complement of a point is (effectively) the full chain;
             # range-neutral like non-block columns — the post-scan

@@ -244,20 +244,10 @@ class HttpJsonRpcTransport:
             }
             for i, h in enumerate(tx_hashes)
         ]
-        out: dict[str, list[dict]] = {}
-        for h, r in zip(tx_hashes, self._post(calls)):
-            logs = (r or {}).get("logs") or []
-            out[h] = [
-                {
-                    "address": lg.get("address"),
-                    "topics": list(lg.get("topics") or []),
-                    "data": lg.get("data") or "0x",
-                    "transactionhash": lg.get("transactionHash"),
-                    "blocknumber": _hex_int(lg.get("blockNumber", 0)),
-                }
-                for lg in logs
-            ]
-        return out
+        return {
+            h: [self._wire_log(lg) for lg in (r or {}).get("logs") or []]
+            for h, r in zip(tx_hashes, self._post(calls))
+        }
 
     def get_logs(
         self,
@@ -284,16 +274,19 @@ class HttpJsonRpcTransport:
         [r] = self._post(
             [{"jsonrpc": "2.0", "id": 0, "method": "eth_getLogs", "params": [params]}]
         )
-        return [
-            {
-                "address": lg.get("address"),
-                "topics": list(lg.get("topics") or []),
-                "data": lg.get("data") or "0x",
-                "transactionhash": lg.get("transactionHash"),
-                "blocknumber": _hex_int(lg.get("blockNumber", 0)),
-            }
-            for lg in (r or [])
-        ]
+        return [self._wire_log(lg) for lg in (r or [])]
+
+    @staticmethod
+    def _wire_log(lg: dict) -> dict:
+        """Ethereum wire log JSON -> the normalized log dict both log
+        paths (receipts and eth_getLogs) serve."""
+        return {
+            "address": lg.get("address"),
+            "topics": list(lg.get("topics") or []),
+            "data": lg.get("data") or "0x",
+            "transactionhash": lg.get("transactionHash"),
+            "blocknumber": _hex_int(lg.get("blockNumber", 0)),
+        }
 
     @staticmethod
     def _wire_block(b: dict) -> dict:
@@ -539,6 +532,13 @@ def make_transport(options: dict):
     return HttpJsonRpcTransport(url)
 
 
+def parse_logs_addresses(options: dict) -> list[str] | None:
+    """The comma-separated ``logs_address`` option as a list (None when
+    unset): the emitting token contracts eth_getLogs filters on."""
+    spec = options.get("logs_address")
+    return [a.strip() for a in spec.split(",") if a.strip()] if spec else None
+
+
 # ---------------------------------------------------------------------------
 # DataSource implementation
 # ---------------------------------------------------------------------------
@@ -618,10 +618,7 @@ class EthereumReader(DataSourceReader):
                 f"logs_mode must be 'receipts' or 'eth_getLogs' "
                 f"(got {options.get('logs_mode')!r})"
             )
-        spec = options.get("logs_address")
-        self.logs_addresses = (
-            [a.strip() for a in spec.split(",") if a.strip()] if spec else None
-        )
+        self.logs_addresses = parse_logs_addresses(options)
         if self.logs_addresses and self.logs_mode != "eth_getlogs":
             raise ValueError(
                 "logs_address requires logs_mode=eth_getLogs (the receipts "

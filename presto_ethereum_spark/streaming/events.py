@@ -25,7 +25,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from presto_ethereum_spark.streaming import drain, settle_to_memory
+from presto_ethereum_spark.streaming import fold_generations, settle_to_memory
 
 
 def _events_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,10 +369,10 @@ def run_foreachbatch_upsert(
     body becomes a single ``MERGE INTO``; the batch-side reduction and
     restart semantics are identical.
 
-    Re-running a batch overwrites its own generation and re-merges the
-    same input — the write is idempotent per (state, batch) pair, which is
-    exactly the contract foreachBatch requires for exactly-once results
-    under retries.
+    The generations are kept by :func:`fold_generations`: a replayed batch
+    re-merges the same input onto the same prior generation, so the write
+    is idempotent per (state, batch) pair — the contract foreachBatch
+    requires for exactly-once results under retries.
 
     Scale: all heavy work (per-batch reduce, state merge) is distributed
     DataFrame compute; the driver only sequences generations.  State size
@@ -389,50 +389,32 @@ def run_foreachbatch_upsert(
     import shutil
     import tempfile
 
-    root = tempfile.mkdtemp(prefix="upsert_state_")
-    gens: list[str] = []
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = f"{root}/gen_{batch_id}"
-        # foreachBatch may re-invoke a batch_id after a failure between the
-        # function returning and the offset-log commit: merge from the last
-        # generation that is NOT this batch's own output (reading and
-        # overwriting the same path in one job is both illegal and wrong —
-        # it would double-apply the batch)
-        prior = [g for g in gens if g != out]
-        compact = _latest_per_key(
-            batch_df.select("user_id", "t_us", "event_id", "value")
-        )
-        if prior:
-            prev = batch_df.sparkSession.read.parquet(prior[-1]).select(
-                "user_id",
-                F.col("last_t_us").alias("t_us"),
-                F.col("last_event_id").alias("event_id"),
-                F.col("last_value").alias("value"),
-            )
-            compact = _latest_per_key(prev.unionByName(
-                compact.select(
+    def fold(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        rows = batch_df.select("user_id", "t_us", "event_id", "value")
+        if prev is not None:
+            rows = rows.unionByName(
+                prev.select(
                     "user_id",
                     F.col("last_t_us").alias("t_us"),
                     F.col("last_event_id").alias("event_id"),
                     F.col("last_value").alias("value"),
                 )
-            ))
-        compact.write.mode("overwrite").parquet(out)
-        if out not in gens:
-            gens.append(out)
+            )
+        return _latest_per_key(rows)
 
-    drain(
-        (source if source is not None else _events_source(spark, sf_dir))
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", f"{root}/_chk")
-    )
-    if not gens:
-        schema = "user_id long, last_t_us long, last_event_id long, last_value double"
-        return spark.createDataFrame([], schema)
-    settled = spark.read.parquet(gens[-1]).localCheckpoint(eager=True)
-    shutil.rmtree(root, ignore_errors=True)
-    return settled
+    root = tempfile.mkdtemp(prefix="upsert_state_")
+    try:
+        last = fold_generations(
+            source if source is not None else _events_source(spark, sf_dir),
+            fold,
+            root,
+        )
+        if last is None:
+            schema = "user_id long, last_t_us long, last_event_id long, last_value double"
+            return spark.createDataFrame([], schema)
+        return spark.read.parquet(last).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def run_trending_topk(

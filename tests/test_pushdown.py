@@ -47,6 +47,30 @@ class TestNumberRanges:
     def test_point(self):
         assert ranges_from_filters([EqualTo(("tx_blocknumber",), 7)]) == [BlockRange(7, 7)]
 
+    @pytest.mark.parametrize(
+        "f",
+        [
+            LessThan(("block_number",), 0),
+            LessThan(("block_number",), 1),
+            LessThanOrEqual(("block_number",), -1),
+            LessThanOrEqual(("block_number",), 0),
+            EqualTo(("block_number",), -1),
+            EqualTo(("block_number",), 0),
+            In(("block_number",), (-1,)),
+            In(("block_number",), (-1, 0)),
+        ],
+        ids=repr,
+    )
+    def test_upper_bound_below_one_is_empty(self, f):
+        """An upper bound below 1 matches no block: the range list is empty,
+        never BlockRange(1, -1), whose end is the OPEN_END sentinel."""
+        assert ranges_from_filters([f]) == []
+
+    def test_in_list_drops_only_invalid_runs(self):
+        assert ranges_from_filters([In(("block_number",), (-1, 5, 6))]) == [
+            BlockRange(5, 6)
+        ]
+
     def test_in_list_consecutive_runs(self):
         # In splits into one range per consecutive run: {5,7,9} with 6,8
         # missing is THREE islands; {5,6,7} merges to one

@@ -292,6 +292,115 @@ class TestForeachBatchUpsert:
                for r in out.collect()}
         assert got == {1: (20, 103, 9.0), 2: (5, 101, 2.0), 3: (7, 104, 4.0)}
 
+    def test_empty_source_leaves_no_state_dir(self, spark, tmp_path, monkeypatch):
+        """No batch runs on an empty source; the state root is removed all
+        the same."""
+        import tempfile
+
+        from presto_ethereum_spark.streaming.events import (
+            run_foreachbatch_upsert,
+        )
+
+        src = tmp_path / "in"
+        src.mkdir()
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        stream = spark.readStream.schema(
+            "user_id long, t_us long, event_id long, value double"
+        ).parquet(str(src))
+        assert run_foreachbatch_upsert(spark, sf_dir="", source=stream).count() == 0
+        assert not list(tmp_path.glob("upsert_state_*"))
+
+
+class TestStagedStream:
+    @pytest.mark.parametrize(
+        "keys",
+        [
+            [None, 3, None, 5, 4],
+            [-7, -3, 0, 2, 9],
+            [i * 1000 + 7_000_000 for i in range(12)],
+            [0, 1, 2, 3, 4, 5],
+            [0],
+        ],
+        ids=["null", "negative", "sparse", "genesis0", "single0"],
+    )
+    @pytest.mark.parametrize("n", [1, 3])
+    def test_every_row_in_exactly_one_range_split(self, spark, tmp_path, keys, n):
+        """Staged in two calls (split 0, then the rest), every row lands in
+        exactly one split, splits are ordered key ranges (NULL in split 0),
+        and the stream reads each row once."""
+        from presto_ethereum_spark.streaming import settle_to_memory, staged_stream
+
+        df = spark.createDataFrame(list(enumerate(keys)), "row long, key long")
+        root = str(tmp_path / "staged")
+        staged_stream(df, "key", n, root, splits=range(1))
+        stream = staged_stream(df, "key", n, root, splits=range(1, n))
+
+        placed = (
+            spark.read.schema(df.schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(root)
+            .select(
+                "row",
+                "key",
+                F.regexp_extract(F.input_file_name(), r"split_(\d+)", 1)
+                .cast("int")
+                .alias("split"),
+            )
+            .collect()
+        )
+        assert sorted(r.row for r in placed) == list(range(len(keys)))
+        assert {r.split for r in placed} <= set(range(n))
+        assert all(r.split == 0 for r in placed if r.key is None)
+        by_key = sorted((r.key, r.split) for r in placed if r.key is not None)
+        assert [s for _, s in by_key] == sorted(s for _, s in by_key)
+
+        read = settle_to_memory(spark, stream, "staged", "append").collect()
+        assert sorted(r.row for r in read) == list(range(len(keys)))
+
+
+class TestFoldGenerations:
+    def test_replayed_batch_settles_like_uninterrupted_run(self, spark, tmp_path):
+        """With the last commit deleted, a second run on the same root
+        replays that batch id; it must fold from the generation before its
+        own and settle to the uninterrupted result."""
+        import os
+
+        import pandas as pd
+
+        from presto_ethereum_spark.streaming import fold_generations
+
+        src = tmp_path / "in"
+        src.mkdir()
+        pd.DataFrame({"k": [1, 2], "v": [1, 2]}).to_parquet(src / "a.parquet")
+        pd.DataFrame({"k": [2, 3], "v": [10, 20]}).to_parquet(src / "b.parquet")
+
+        def stream():
+            return (
+                spark.readStream.schema("k long, v long")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(str(src))
+            )
+
+        def fold(batch, prev):
+            rows = batch if prev is None else prev.unionByName(batch)
+            return rows.groupBy("k").agg(F.sum("v").alias("v"))
+
+        def settled(gen):
+            return sorted(map(tuple, spark.read.parquet(gen).collect()))
+
+        want = settled(fold_generations(stream(), fold, str(tmp_path / "once")))
+        assert want == [(1, 1), (2, 12), (3, 20)]
+
+        root = str(tmp_path / "replayed")
+        assert fold_generations(stream(), fold, root).endswith("gen_1")
+        commits = f"{root}/_chk/commits"
+        for name in ("1", ".1.crc"):
+            if os.path.exists(f"{commits}/{name}"):
+                os.remove(f"{commits}/{name}")
+        last = fold_generations(stream(), fold, root)
+        assert os.path.exists(f"{commits}/1")  # the replayed batch committed
+        assert last.endswith("gen_1") and settled(last) == want
+
 
 class TestJsonlManifestSink:
     def test_commit_manifests_and_readback(self, spark, tmp_path):
