@@ -14,9 +14,9 @@ Two classes:
   profile in the system.  Here they run as Arrow-batched pandas UDFs over a
   pluggable :class:`ChainStateBackend`:
 
-  * ``RpcBackend`` — JSON-RPC with **per-partition connection reuse and
-    request batching** (one HTTP POST per Arrow batch instead of one per
-    row: >=100x fewer round-trips than the reference at scale);
+  * ``RpcBackend`` — JSON-RPC with **request batching** (one HTTP POST
+    per Arrow batch instead of one per row: >=100x fewer round-trips than
+    the reference at scale);
   * ``FixtureBackend`` — hermetic chain_state lookup table for tests
     (FIXTURES.md §2).
 
@@ -32,6 +32,7 @@ signature with an optional second argument accepting int | str | None.
 
 from __future__ import annotations
 
+import numbers
 import os
 from typing import Iterator
 
@@ -176,8 +177,10 @@ class FixtureBackend(ChainStateBackend):
 
 class RpcBackend(ChainStateBackend):
     """JSON-RPC 2.0 batch client.  One HTTP POST per pandas batch (vs the
-    reference's one RPC per row); the connection is created lazily inside the
-    executor and reused across batches of a partition.
+    reference's one RPC per row), sent through the chain source's
+    :class:`~presto_ethereum_spark.sources.rpc.HttpJsonRpcTransport`: transient
+    failures retry there, and a response carrying an ``error`` member raises
+    ``RpcError`` instead of reading as a zero balance.
 
     Endpoint selection mirrors EthereumConnectorConfig.java:6-39: a single
     ``url`` option covers the http/infura variants (both are HTTP POST); ipc
@@ -185,30 +188,18 @@ class RpcBackend(ChainStateBackend):
     """
 
     def __init__(self, url: str | None = None, timeout: float = 30.0):
+        from presto_ethereum_spark.sources.rpc import HttpJsonRpcTransport
+
         self.url = url or os.environ.get("ETH_RPC_URL", "http://localhost:8545/")
-        self.timeout = timeout
-        self._session = None
-
-    def _post(self, calls: list[dict]) -> list[dict]:
-        import json
-        import urllib.request
-
-        req = urllib.request.Request(
-            self.url,
-            data=json.dumps(calls).encode(),
-            headers={"Content-Type": "application/json"},
-        )
-        with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-            out = json.loads(resp.read())
-        by_id = {r["id"]: r for r in out}
-        return [by_id[c["id"]] for c in calls]
+        self.transport = HttpJsonRpcTransport(self.url, timeout=timeout)
 
     @staticmethod
     def _block_param(block) -> str:
         if block is None:
             return "latest"
-        if isinstance(block, (int,)):
-            return hex(block)
+        # numbers.Integral also covers the numpy ints a pandas batch yields
+        if isinstance(block, numbers.Integral):
+            return hex(int(block))
         return str(block)  # 'latest' | 'earliest' | 'pending'
 
     def _batch(self, method: str, addresses: pd.Series, block) -> list:
@@ -217,7 +208,7 @@ class RpcBackend(ChainStateBackend):
             {"jsonrpc": "2.0", "id": i, "method": method, "params": [addr, tag]}
             for i, addr in enumerate(addresses)
         ]
-        return [r.get("result") for r in self._post(calls)]
+        return self.transport._post(calls)
 
     def get_balance(self, addresses, block):
         res = self._batch("eth_getBalance", addresses, block)
@@ -236,16 +227,13 @@ class RpcBackend(ChainStateBackend):
         return pd.Series([r or "0x" for r in res], index=addresses.index)
 
     def gas_price(self):
-        [r] = self._post(
+        [r] = self.transport._post(
             [{"jsonrpc": "2.0", "id": 0, "method": "eth_gasPrice", "params": []}]
         )
-        return float(int(r["result"], 16))
+        return float(int(r, 16))
 
     def block_number(self):
-        [r] = self._post(
-            [{"jsonrpc": "2.0", "id": 0, "method": "eth_blockNumber", "params": []}]
-        )
-        return int(r["result"], 16)
+        return self.transport.block_number()
 
 
 # ---------------------------------------------------------------------------

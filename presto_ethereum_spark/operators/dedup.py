@@ -46,6 +46,7 @@ __all__ = [
     "simhash_dedup_pairs",
     "jaccard_pairs",
     "jaccard_truth_pairs",
+    "recall_report",
     "minhash_calibration",
     "shingle_df_profile",
     "fuzzy_prefix_key",
@@ -313,6 +314,37 @@ def roundN_ratio(num: Column, den: Column, digits: int) -> Column:
     # multiple of b, so the double divide is error-free (values << 2^53)
     eN = ((a - a % b) / b).cast("long")
     return eN / F.lit(float(p))
+
+
+def recall_report(
+    truth: DataFrame, candidates: DataFrame, keys: list[str], by: list[str]
+) -> DataFrame:
+    """The ONE truth-vs-candidates quality report behind every graded
+    recall entry: ``(*by, n_truth, n_hits)`` with both counts BIGINT, one
+    row per ``by`` group of ``truth``.  A group no candidate reaches
+    reports ``n_hits = 0``; candidate rows absent from truth are ignored.
+
+    ONE pass over truth: a left join against the candidate set marks each
+    truth row caught or missed, so ``count(*)`` and ``count(_hit)`` come
+    from a single aggregation.  A left_semi join for hits plus a separate
+    groupBy for totals references the truth subtree twice, and Spark
+    re-computes the whole subtree per reference (plan audit: two
+    "Scan parquet -> ... -> Window -> BroadcastHashJoin" trees for the
+    shingle -> postings -> pair truth of the dedup reports).  Reading
+    truth once, the report needs no ``persist``.
+
+    Precondition: ``candidates`` is distinct on ``keys`` (top-k lists and
+    pair sets are), so the left join never duplicates a truth row and
+    ``count(_hit)`` equals the semi-join hit count."""
+    hit = candidates.select(*keys, F.lit(1).alias("_hit"))
+    return (
+        truth.join(hit, list(keys), "left")
+        .groupBy(*by)
+        .agg(
+            F.count("*").cast("long").alias("n_truth"),
+            F.count("_hit").cast("long").alias("n_hits"),
+        )
+    )
 
 
 def jaccard_from_shingles(sa: Column, sb: Column) -> Column:
@@ -669,7 +701,7 @@ def jaccard_truth_pairs(
     threshold_tenths: int = TRUTH_TENTHS,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_n: int = 3,
+    shingle_n: int = SHINGLE_N,
     max_df: int | None = 8,
 ) -> DataFrame:
     """The ONE truth-pair pipeline shared by the LSH quality reports
@@ -803,7 +835,7 @@ def minhash_calibration(
     # threshold 0 = every overlapping pair: the same shared both-sides
     # capped self-join as the truth pipeline (ReuseExchange materializes
     # the postings once), unfiltered
-    tp = jaccard_truth_pairs(df, 0, text_col, id_col, 3, max_df)
+    tp = jaccard_truth_pairs(df, 0, text_col, id_col, SHINGLE_N, max_df)
     j = ag.join(tp, ["id_a", "id_b"], "left").select(
         "n_agree",
         F.coalesce(

@@ -2246,7 +2246,7 @@ def jl_recall_report(
     Scale: both rank passes are the broadcast-probe + WindowGroupLimit
     brute-force shape; the projected pass reads 16 longs per row
     instead of 64 floats — the bandwidth saving IS the point of JL."""
-    from presto_ethereum_spark.operators.dedup import round6_ratio
+    from presto_ethereum_spark.operators.dedup import recall_report, round6_ratio
 
     vq_full = df.select(
         F.col(id_col).alias("id"),
@@ -2272,23 +2272,15 @@ def jl_recall_report(
             _l2sq(F.col("qv"), F.col("v")).alias("d2"),
         )
         w = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
-        return (
-            scored.withColumn("r", F.row_number().over(w))
-            .where(F.col("r") <= k)
-            .groupBy("query_id")
-            .agg(F.sort_array(F.collect_list("neighbor_id")).alias("ids"))
-        )
+        return scored.withColumn("r", F.row_number().over(w)).where(F.col("r") <= k)
 
-    exact = topk(vq_full).withColumnRenamed("ids", "exact_ids")
-    proj = topk(jl).withColumnRenamed("ids", "jl_ids")
-    inter = F.size(F.array_intersect(F.col("exact_ids"), F.col("jl_ids")))
-    return (
-        exact.join(proj, "query_id")
-        .select(
-            "query_id",
-            inter.cast("long").alias("n_overlap"),
-            round6_ratio(inter, F.lit(k)).alias("recall"),
-        )
+    rep = recall_report(
+        topk(vq_full), topk(jl), ["query_id", "neighbor_id"], ["query_id"]
+    )
+    return rep.select(
+        "query_id",
+        F.col("n_hits").alias("n_overlap"),
+        round6_ratio(F.col("n_hits"), F.lit(k)).alias("recall"),
     )
 
 

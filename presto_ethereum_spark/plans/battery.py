@@ -6996,36 +6996,29 @@ def seed_centroids_of(e: DataFrame):
     return seed_centroids(e, n_cells=8)
 
 
+def _probe_recall(e: DataFrame, approx: DataFrame) -> DataFrame:
+    """recall_report of ``approx`` (query_id, neighbor_id, ...) against
+    exact brute-force cosine top-10 truth over the fixed probe set
+    (vec_id < 5): ``(query_id, n_truth, n_hits)``."""
+    from presto_ethereum_spark.operators.dedup import recall_report
+    from presto_ethereum_spark.operators.similarity import brute_force_topk
+
+    truth = brute_force_topk(e, e.where(F.col("vec_id") < 5), k=10)
+    return recall_report(truth, approx, ["query_id", "neighbor_id"], ["query_id"])
+
+
 def _ivf_recall_report(e: DataFrame, cents) -> DataFrame:
     """Shared body of emb_ivf_recall and its hash-sampled variant:
     recall@10 of the nprobe=2 IVF serve path vs brute-force truth over
     the fixed probe set (vec_id < 5)."""
-    from presto_ethereum_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-    )
+    from presto_ethereum_spark.operators.similarity import ivf_topk
 
     q5 = e.where(F.col("vec_id") < 5)
-    truth = brute_force_topk(e, q5, k=10).select("query_id", "neighbor_id")
-    approx = ivf_topk(e, q5, centroids=cents, nprobe=2, k=10).select(
-        "query_id", "neighbor_id"
-    )
-    hits = (
-        approx.join(truth, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n"))
-    )
-    return (
-        truth.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n", F.lit(0)).cast("bigint").alias("n_hits"),
-            (F.coalesce("n", F.lit(0)).cast("double") / F.lit(10.0)).alias(
-                "recall_at_10"
-            ),
-        )
+    approx = ivf_topk(e, q5, centroids=cents, nprobe=2, k=10)
+    return _probe_recall(e, approx).select(
+        "query_id",
+        "n_hits",
+        (F.col("n_hits").cast("double") / F.lit(10.0)).alias("recall_at_10"),
     )
 
 
@@ -7152,7 +7145,6 @@ def emb_ivf_recall_refined(spark: SparkSession, sf: str) -> DataFrame:
     only); serving is unchanged — the refined codebook rides the exact
     same ``ivf_topk`` path as the seeds."""
     from presto_ethereum_spark.operators.similarity import (
-        brute_force_topk,
         ivf_topk,
         kmeans_centroids,
         seed_centroids,
@@ -7171,35 +7163,21 @@ def emb_ivf_recall_refined(spark: SparkSession, sf: str) -> DataFrame:
             e, n_cells=8, n_iters=1, seeds=seeds
         )
     q5 = e.where(F.col("vec_id") < 5)
-    truth = brute_force_topk(e, q5, k=10).select("query_id", "neighbor_id")
-    a0 = ivf_topk(e, q5, centroids=seeds, nprobe=2, k=10).select(
-        "query_id", "neighbor_id"
-    )
-    a1 = ivf_topk(e, q5, centroids=refined, nprobe=2, k=10).select(
-        "query_id", "neighbor_id"
-    )
-    h0 = (
-        a0.join(truth, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n0"))
-    )
-    h1 = (
-        a1.join(truth, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n1"))
-    )
+
+    def hits(cents, name: str) -> DataFrame:
+        approx = ivf_topk(e, q5, centroids=cents, nprobe=2, k=10)
+        return _probe_recall(e, approx).select(
+            "query_id", F.col("n_hits").alias(name)
+        )
+
     return (
-        truth.select("query_id")
-        .distinct()
-        .join(h0, "query_id", "left")
-        .join(h1, "query_id", "left")
+        hits(seeds, "n_hits_seed")
+        .join(hits(refined, "n_hits_refined"), "query_id")
         .select(
             "query_id",
-            F.coalesce("n0", F.lit(0)).cast("bigint").alias("n_hits_seed"),
-            F.coalesce("n1", F.lit(0)).cast("bigint").alias("n_hits_refined"),
-            (F.coalesce("n1", F.lit(0)) - F.coalesce("n0", F.lit(0)))
-            .cast("bigint")
-            .alias("delta"),
+            "n_hits_seed",
+            "n_hits_refined",
+            (F.col("n_hits_refined") - F.col("n_hits_seed")).alias("delta"),
         )
     )
 
@@ -10849,37 +10827,15 @@ def emb_lsh_recall(spark: SparkSession, sf: str) -> DataFrame:
     in the oracle), the LSH counterpart of emb_ivf_recall_refined.
     recall uses round6_ratio integer half-up."""
     from presto_ethereum_spark.operators.dedup import round6_ratio
-    from presto_ethereum_spark.operators.similarity import (
-        brute_force_topk,
-        lsh_topk,
-    )
+    from presto_ethereum_spark.operators.similarity import lsh_topk
 
     e = t_spread(spark, sf, "embeddings", parts=8)
-    q5 = F.col("query_id") < 5
-    truth = brute_force_topk(e, e.where(F.col("vec_id") < 5), k=10).select(
-        "query_id", "neighbor_id"
-    )
-    lsh = (
-        lsh_topk(e, dim=64, k=10, bands=4, bits=24)
-        .where(q5)
-        .select("query_id", "neighbor_id")
-    )
-    hits = (
-        truth.join(lsh, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    base = truth.groupBy("query_id").agg(F.count("*").alias("n_truth"))
-    return (
-        base.join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.col("n_truth").cast("long").alias("n_truth"),
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            round6_ratio(
-                F.coalesce("n_hits", F.lit(0)), F.col("n_truth")
-            ).alias("recall"),
-        )
+    lsh = lsh_topk(e, dim=64, k=10, bands=4, bits=24).where(F.col("query_id") < 5)
+    return _probe_recall(e, lsh).select(
+        "query_id",
+        "n_truth",
+        "n_hits",
+        round6_ratio(F.col("n_hits"), F.col("n_truth")).alias("recall"),
     )
 
 
@@ -11019,9 +10975,9 @@ def emb_pq_recall(spark: SparkSession, sf: str) -> DataFrame:
     Scale: the ADC side is the serving plan (codes + broadcast LUT, raw
     vectors never read); the exact-truth side is the 5-probe broadcast
     scan — the price of measuring recall, not a serving path."""
-    from presto_ethereum_spark.operators.dedup import round6_ratio
+    from presto_ethereum_spark.operators.dedup import recall_report, round6_ratio
 
-    adc = emb_pq_adc_topk(spark, sf).select("query_id", "neighbor_id")
+    adc = emb_pq_adc_topk(spark, sf)
     e = t_spread(spark, sf, "embeddings", parts=8)
     q = F.broadcast(
         e.where(F.col("vec_id") < 5).select(
@@ -11044,24 +11000,13 @@ def emb_pq_recall(spark: SparkSession, sf: str) -> DataFrame:
         .withColumn("_d2", d2)
         .withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= 10)
-        .select("query_id", "neighbor_id")
     )
-    hits = (
-        truth.join(adc, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    base = truth.groupBy("query_id").agg(F.count("*").alias("n_truth"))
-    return (
-        base.join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.col("n_truth").cast("long").alias("n_truth"),
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            round6_ratio(
-                F.coalesce("n_hits", F.lit(0)), F.col("n_truth")
-            ).alias("recall"),
-        )
+    rep = recall_report(truth, adc, ["query_id", "neighbor_id"], ["query_id"])
+    return rep.select(
+        "query_id",
+        "n_truth",
+        "n_hits",
+        round6_ratio(F.col("n_hits"), F.col("n_truth")).alias("recall"),
     )
 
 
@@ -11909,7 +11854,7 @@ def _minhash_recall_report(d: DataFrame) -> DataFrame:
     from presto_ethereum_spark.operators.dedup import (
         jaccard_truth_pairs,
         minhash_candidates,
-        round6_ratio,
+        recall_report,
     )
 
     uni = F.col("sz_a") + F.col("sz_b") - F.col("inter")
@@ -11922,29 +11867,19 @@ def _minhash_recall_report(d: DataFrame) -> DataFrame:
         .otherwise(F.lit("0.2-0.3"))
         .alias("bucket"),
     )
-    # ONE pass over truth (r13): a left join against the distinct candidate
-    # set marks each truth pair caught/missed, so n_truth (count(*)) and
-    # n_caught (count of markers) come from a single aggregation.  The old
-    # two-branch shape (left_semi for hits + separate groupBy for totals)
-    # referenced the truth subtree twice, and Spark physically re-computed
-    # the whole shingle->postings->pair pipeline for each branch (plan
-    # audit: 2x "Scan parquet -> ... -> Window -> BroadcastHashJoin" trees).
-    # Exactly equivalent: cand is distinct pairs, so the left join never
-    # duplicates a truth row and count(_hit) == the semi-join count.
-    cand = minhash_candidates(d).withColumn("_hit", F.lit(1))
-    return (
-        truth.join(cand, ["id_a", "id_b"], "left")
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_truth"),
-            F.count("_hit").alias("n_caught"),
-        )
-        .select(
-            "bucket",
-            F.col("n_truth").cast("long").alias("n_truth"),
-            F.col("n_caught").cast("long").alias("n_caught"),
-            round6_ratio(F.col("n_caught"), F.col("n_truth")).alias("recall"),
-        )
+    rep = recall_report(truth, minhash_candidates(d), ["id_a", "id_b"], ["bucket"])
+    return _bucket_recall(rep)
+
+
+def _bucket_recall(rep: DataFrame) -> DataFrame:
+    """Final projection of the per-bucket dedup recall reports."""
+    from presto_ethereum_spark.operators.dedup import round6_ratio
+
+    return rep.select(
+        "bucket",
+        "n_truth",
+        F.col("n_hits").alias("n_caught"),
+        round6_ratio(F.col("n_hits"), F.col("n_truth")).alias("recall"),
     )
 
 
@@ -12343,7 +12278,7 @@ def _simhash_recall_report(d: DataFrame) -> DataFrame:
     pigeonhole-blocked exact Hamming truth vs 4x15-bit banded
     candidates, recall per distance bucket."""
     from presto_ethereum_spark.operators.dedup import (
-        round6_ratio,
+        recall_report,
         simhash_candidates,
         simhash_hamming_truth,
     )
@@ -12356,27 +12291,8 @@ def _simhash_recall_report(d: DataFrame) -> DataFrame:
         .otherwise(F.lit("5-6"))
         .alias("bucket"),
     )
-    # ONE pass over truth via left join + single aggregation — same
-    # restructure (and same equivalence argument: cand is distinct) as
-    # _minhash_recall_report; the old two-branch shape re-computed the
-    # pigeonhole truth join once per branch.
-    cand = simhash_candidates(d).select(
-        "id_a", "id_b", F.lit(1).alias("_hit")
-    )
-    return (
-        truth.join(cand, ["id_a", "id_b"], "left")
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_truth"),
-            F.count("_hit").alias("n_caught"),
-        )
-        .select(
-            "bucket",
-            F.col("n_truth").cast("long").alias("n_truth"),
-            F.col("n_caught").cast("long").alias("n_caught"),
-            round6_ratio(F.col("n_caught"), F.col("n_truth")).alias("recall"),
-        )
-    )
+    rep = recall_report(truth, simhash_candidates(d), ["id_a", "id_b"], ["bucket"])
+    return _bucket_recall(rep)
 
 
 @q(
@@ -14283,31 +14199,14 @@ def emb_sq8_recall(spark: SparkSession, sf: str) -> DataFrame:
     loss).  SQ8's loss comes only from int8 rounding of the corpus side,
     so recall is expected near 1.0 at 64 dims — the report is the
     evidence, graded."""
-    from presto_ethereum_spark.operators.similarity import (
-        brute_force_topk,
-        sq8_topk,
-    )
+    from presto_ethereum_spark.operators.similarity import sq8_topk
 
     e = t_spread(spark, sf, "embeddings", parts=8)
-    q5 = e.where(F.col("vec_id") < 5)
-    truth = brute_force_topk(e, q5, k=10).select("query_id", "neighbor_id")
-    approx = sq8_topk(e, q5, k=10).select("query_id", "neighbor_id")
-    hits = (
-        approx.join(truth, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n"))
-    )
-    return (
-        truth.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n", F.lit(0)).cast("bigint").alias("n_hits"),
-            (F.coalesce("n", F.lit(0)).cast("double") / F.lit(10.0)).alias(
-                "recall_at_10"
-            ),
-        )
+    approx = sq8_topk(e, e.where(F.col("vec_id") < 5), k=10)
+    return _probe_recall(e, approx).select(
+        "query_id",
+        "n_hits",
+        (F.col("n_hits").cast("double") / F.lit(10.0)).alias("recall_at_10"),
     )
 
 

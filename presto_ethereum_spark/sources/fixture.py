@@ -22,13 +22,21 @@ pruning all come from the parquet scan via Catalyst:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from presto_ethereum_spark.schemas import TABLE_BLOCK, TABLE_ERC20, TABLE_TRANSACTION
 from presto_ethereum_spark.sources.decode import (
     blocks_from_chain,
     erc20_from_chain,
     transactions_from_chain,
+    truncate_varchar_bounds,
 )
+
+_DERIVE = {
+    TABLE_BLOCK: blocks_from_chain,
+    TABLE_TRANSACTION: transactions_from_chain,
+    TABLE_ERC20: erc20_from_chain,
+}
 
 
 class EthereumFixtureSource:
@@ -63,27 +71,23 @@ class EthereumFixtureSource:
                 self._chain = self.spark.read.parquet(self.chain_path)
         return self._chain
 
-    def table(self, name: str) -> DataFrame:
+    def _derive(self, chain: DataFrame, name: str) -> DataFrame:
+        """The one table dispatch of :meth:`table` and
+        :meth:`table_for_block_range`: decode ``name`` from ``chain`` and
+        apply the varchar truncation when ``strict_varchar`` is on."""
         name = name.lower()
-        if name == TABLE_BLOCK:
-            out = blocks_from_chain(self.chain)
-        elif name == TABLE_TRANSACTION:
-            out = transactions_from_chain(self.chain)
-        elif name == TABLE_ERC20:
-            out = erc20_from_chain(self.chain)
-        else:
+        derive = _DERIVE.get(name)
+        if derive is None:
             # Unknown table -> error, mirroring EthereumTable.java:7-14 /
             # EthereumMetadata.java:71-81.
             raise ValueError(
                 f"Unknown table: {name!r} (expected block|transaction|erc20)"
             )
-        if self.strict_varchar:
-            from presto_ethereum_spark.sources.decode import (
-                truncate_varchar_bounds,
-            )
+        out = derive(chain)
+        return truncate_varchar_bounds(out, name) if self.strict_varchar else out
 
-            out = truncate_varchar_bounds(out, name)
-        return out
+    def table(self, name: str) -> DataFrame:
+        return self._derive(self.chain, name)
 
     def table_for_block_range(
         self, name: str, lo: int | None = None, hi: int | None = None
@@ -96,21 +100,12 @@ class EthereumFixtureSource:
         contract: every row of the pruned scan is still produced, and the
         caller's own filter re-applies the predicate (EthereumMetadata.java:236).
         """
-        from pyspark.sql import functions as F
-
         chain = self.chain
         if lo is not None:
             chain = chain.where(F.col("number") >= lo)
         if hi is not None:
             chain = chain.where(F.col("number") <= hi)
-        name = name.lower()
-        if name == TABLE_BLOCK:
-            return blocks_from_chain(chain)
-        if name == TABLE_TRANSACTION:
-            return transactions_from_chain(chain)
-        if name == TABLE_ERC20:
-            return erc20_from_chain(chain)
-        raise ValueError(f"Unknown table: {name!r} (expected block|transaction|erc20)")
+        return self._derive(chain, name)
 
     def register_views(self) -> None:
         """``SHOW TABLES`` parity: block / erc20 / transaction."""

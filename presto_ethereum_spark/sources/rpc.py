@@ -173,19 +173,17 @@ class HttpJsonRpcTransport:
                     raise
             time.sleep(0.5 * (2**attempt))
             attempt += 1
-        if isinstance(out, dict):
-            out = [out]
-        by_id = {r["id"]: r for r in out}
-        results = []
-        for c in calls:
-            r = by_id[c["id"]]
+        # a batch the node rejects as a whole comes back as ONE object
+        # (id null), not a list
+        out = out if isinstance(out, list) else [out]
+        for r in out:
             if r.get("error"):
                 err = r["error"]
                 # an error member is a REJECTION, not an empty result —
                 # swallowing it would silently drop the call's data
                 raise RpcError(err.get("code"), str(err.get("message", err)))
-            results.append(r.get("result"))
-        return results
+        by_id = {r["id"]: r.get("result") for r in out}
+        return [by_id[c["id"]] for c in calls]
 
     def block_number(self) -> int:
         [r] = self._post(

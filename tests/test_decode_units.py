@@ -106,6 +106,23 @@ class TestVarcharBounds:
         assert len(out.block_extradata) == 1000  # unbounded stays untouched
         assert out.block_number == 1  # non-varchar untouched
 
+    def test_block_range_read_truncates_in_strict_mode(self, spark, tmp_path):
+        """table_for_block_range shares table()'s dispatch, so the strict
+        bounds apply to block-range reads too."""
+        from presto_ethereum_spark.schemas import CHAIN_BLOCK_SCHEMA
+        from presto_ethereum_spark.sources.fixture import EthereumFixtureSource
+
+        row = {f.name: None for f in CHAIN_BLOCK_SCHEMA.fields}
+        row.update(number=1, hash="0x" + "ab" * 50, uncles=[], transactions=[])
+        path = str(tmp_path / "chain.parquet")
+        spark.createDataFrame([row], CHAIN_BLOCK_SCHEMA).write.parquet(path)
+        strict = EthereumFixtureSource(spark, path, strict_varchar=True)
+        default = EthereumFixtureSource(spark, path)
+        [out] = strict.table_for_block_range("block", 1, 1).collect()
+        assert out.block_hash == "0x" + "ab" * 32
+        [raw] = default.table_for_block_range("block", 1, 1).collect()
+        assert len(raw.block_hash) == 102
+
     def test_wellformed_data_unchanged(self, spark, chain_source):
         """On well-formed chain data the bounds never bite: strict and
         default decodes are identical."""

@@ -2,6 +2,8 @@
 incl. aliases and case-insensitivity, round-trip property, unknown-unit
 error, and the 5 chain-state functions over the hermetic fixture backend."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import Row
@@ -222,3 +224,58 @@ class TestUdtfs:
         assert [(r["pos"], r["gram"]) for r in rows] == [
             (0, "a b"), (1, "b c"), (2, "c d"),
         ]
+
+
+class TestRpcBackend:
+    """RpcBackend posts through HttpJsonRpcTransport: block numbers go out
+    as hex quantities and a rejected call raises instead of reading as 0."""
+
+    def _backend(self, monkeypatch, reply):
+        from presto_ethereum_spark.functions.web3 import RpcBackend
+
+        sent = []
+
+        def post_once(body):
+            calls = json.loads(body)
+            sent.extend(calls)
+            return reply(calls)
+
+        backend = RpcBackend("http://unused/")
+        monkeypatch.setattr(backend.transport, "_post_once", post_once)
+        return backend, sent
+
+    def test_numpy_int_block_is_hex(self, monkeypatch):
+        import pandas as pd
+
+        backend, sent = self._backend(
+            monkeypatch,
+            lambda calls: [{"id": c["id"], "result": "0x2a"} for c in calls],
+        )
+        # the scalar a pandas UDF batch yields for F.lit(4000000)
+        block = pd.Series([4_000_000], dtype="int32").iloc[0]
+        out = backend.get_balance(pd.Series(["0xa", "0xb"]), block)
+        assert [c["params"][1] for c in sent] == ["0x3d0900", "0x3d0900"]
+        assert out.tolist() == [42.0, 42.0]
+
+    @pytest.mark.parametrize("whole_batch", [False, True])
+    def test_error_member_raises(self, monkeypatch, whole_batch):
+        import pandas as pd
+
+        from presto_ethereum_spark.sources.rpc import RpcError
+
+        err = {"code": -32602, "message": "invalid argument 1"}
+
+        def reply(calls):
+            if whole_batch:  # one error object (id null) for the whole batch
+                return {"id": None, "error": err}
+            return [{"id": c["id"], "error": err} for c in calls]
+
+        backend, _ = self._backend(monkeypatch, reply)
+        addrs = pd.Series(["0xa"])
+        for call in (
+            backend.get_balance,
+            backend.get_transaction_count,
+            backend.get_code,
+        ):
+            with pytest.raises(RpcError, match="-32602"):
+                call(addrs, "latest")

@@ -3299,6 +3299,30 @@ class TestRandomizedReferees:
         assert got == expected
 
 
+class TestRecallReport:
+    def test_counts_per_group(self, spark):
+        """Two groups with hits, one group no candidate reaches (reported
+        with n_hits 0, not NULL and not dropped), and candidate rows absent
+        from truth (ignored)."""
+        truth = spark.createDataFrame(
+            [(1, 10, "a"), (1, 11, "a"), (1, 12, "a"),
+             (2, 20, "b"), (2, 21, "b"),
+             (3, 30, "c")],
+            "q long, n long, g string",
+        )
+        cands = spark.createDataFrame(
+            [(1, 10), (1, 12), (1, 99), (2, 21), (2, 98), (4, 40)],
+            "q long, n long",
+        )
+        rep = dedup.recall_report(truth, cands, ["q", "n"], ["g"])
+        assert rep.columns == ["g", "n_truth", "n_hits"]
+        assert [f.dataType.simpleString() for f in rep.schema.fields[1:]] == [
+            "bigint", "bigint"
+        ]
+        got = {r.g: (r.n_truth, r.n_hits) for r in rep.collect()}
+        assert got == {"a": (3, 2), "b": (2, 1), "c": (1, 0)}
+
+
 class TestMinhashRecall:
     def test_buckets_and_recall_bounds(self, spark):
         import tempfile
