@@ -12,6 +12,12 @@ days (~44/run over ~310 entries), instead of the old 12-random-per-day
 sample whose expected full-coverage time was ~2+ weeks with no guarantee.
 test_week_schedule_covers_every_entry proves the invariant over the seed
 schedule itself.
+
+Test ids must not depend on the calendar, or the set of collected tests
+changes from one day to the next.  So the parametrized cases are a FIXED
+slice of the schedule (the one for day ordinal 739906, listed by name so a
+growing registry does not reshuffle it), and today's covering slice runs as
+one test, test_todays_schedule_slice, which names every failing entry.
 Run the full battery explicitly with `python scripts/check_battery.py`.
 """
 
@@ -73,20 +79,56 @@ def duck():
     return con
 
 
-@pytest.mark.parametrize("name", _todays_sample())
+# The schedule's slice for day ordinal 739906, frozen as the stable
+# parametrized set.
+PINNED_SLICE = [
+    "doc_char_diversity", "doc_cms_token_counts", "doc_count_cosine_pairs",
+    "doc_distribution_drift", "doc_jaccard_threshold_curve",
+    "doc_minhash_recall_sampled", "doc_quality_classifier",
+    "doc_rake_keywords", "doc_select_corpus", "doc_simhash_recall_sampled",
+    "doc_tfidf_topk", "doc_token_entropy", "emb_dim_stats",
+    "emb_hard_negatives", "emb_ivf_topk", "emb_ivfpq_topk",
+    "emb_jl_rerank_topk", "emb_knn_join_ivf", "emb_similar_pairs",
+    "eth_address_sessions", "eth_erc20_movement",
+    "eth_erc20_movement_getlogs", "eth_gas_utilization",
+    "eth_pushdown_window", "eth_token_heavy_hitters", "rel_audience_overlap",
+    "rel_basket_lift", "rel_bloom_prefilter", "rel_decile_lift",
+    "rel_distinct_segments", "rel_forecast_revenue", "rel_inactive_by_nation",
+    "rel_large_orders", "rel_merge_upsert", "rel_ohlc_bars",
+    "rel_percentile_cont", "rel_pivot_orders", "rel_semi_join",
+    "rel_snapshot_diff", "rel_supplier_cnt_by_part", "rel_union_all_bag",
+    "rel_unpivot_metrics", "rel_waiting_supplier", "stream_funnel_firsts",
+    "stream_heavy_hitters", "stream_kmv_distinct",
+    "stream_u256_balance_restart", "stream_windowed_distinct",
+]
+
+
+def _verdict(spark, duck, sf_dir, name) -> str:
+    df = battery.queries()[name](spark, sf_dir)
+    return compare(name, df, duck.sql(battery.oracles()[name]))
+
+
+@pytest.mark.parametrize("name", PINNED_SLICE)
 def test_rotating_oracle_gate(spark, duck, name):
-    df = battery.queries()[name](spark, SF_DIR)
-    verdict = compare(name, df, duck.sql(battery.oracles()[name]))
+    verdict = _verdict(spark, duck, SF_DIR, name)
     assert verdict == "OK", f"{name}: {verdict}"
 
 
-# --- sf0.1 rotation for rounded-double outputs ------------------------------
+def test_todays_schedule_slice(spark, duck):
+    """Today's covering slice, minus the entries the pinned cases run."""
+    todo = [n for n in _todays_sample() if n not in PINNED_SLICE]
+    verdicts = {n: _verdict(spark, duck, SF_DIR, n) for n in todo}
+    assert {n: v for n, v in verdicts.items() if v != "OK"} == {}
+
+
+# --- sf0.1 gate for rounded-double outputs ----------------------------------
 #
 # Entries whose GRADED output keeps a round(double, d>=1) column (the
 # audited-SAFE transcendental/scale-bounded set in ROUNDING_AUDIT.md).  A
 # shortest-repr-vs-binary rounding tie is scale-dependent — sf0.001 can stay
 # green for rounds while sf0.1 diverges (exactly how doc_bigram_fluency hid
-# for 5 rounds) — so this sample runs at sf0.1, rotating daily.
+# for 5 rounds) — so these entries run at sf0.1, every one on every run
+# (about a minute on 4 cores), which also keeps the test ids fixed.
 
 SF01_DIR = "/root/testdata/sf0.1"
 ROUNDED_DOUBLE_ENTRIES = [
@@ -113,22 +155,11 @@ ROUNDED_DOUBLE_ENTRIES = [
     # round-6 late addition: ln of an exact rational, round @6
     "doc_token_entropy",
     # round-6 continuation: ln-based OLS fit, sqrt-based cosines — all in
-    # the audited-safe irrational class, rotated at sf0.1 regardless
+    # the audited-safe irrational class, gated at sf0.1 regardless
     "doc_zipf_slope",
     "emb_hard_negatives",
     "doc_count_cosine_pairs",
 ]
-SF01_SAMPLE = 3
-
-
-def _todays_sf01_sample() -> list[str]:
-    import random
-
-    known = [
-        n for n in ROUNDED_DOUBLE_ENTRIES if n in battery.oracles()
-    ]
-    rng = random.Random(datetime.date.today().toordinal() * 31 + 7)
-    return rng.sample(known, min(SF01_SAMPLE, len(known)))
 
 
 @pytest.fixture(scope="module")
@@ -142,8 +173,9 @@ def duck_sf01():
     return con
 
 
-@pytest.mark.parametrize("name", _todays_sf01_sample())
+@pytest.mark.parametrize(
+    "name", [n for n in ROUNDED_DOUBLE_ENTRIES if n in battery.oracles()]
+)
 def test_rounded_double_entries_at_sf01(spark, duck_sf01, name):
-    df = battery.queries()[name](spark, SF01_DIR)
-    verdict = compare(name, df, duck_sf01.sql(battery.oracles()[name]))
+    verdict = _verdict(spark, duck_sf01, SF01_DIR, name)
     assert verdict == "OK", f"{name}: {verdict}"
