@@ -50,8 +50,9 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
-
+# FROZEN: cross-round comparisons are 1:1 on this set.  New entries bench
+# in INCOMING (timed identically, totalled separately as
+# incoming_total_wall).
 HEADLINE = [
     "doc_zipf_slope",
     "doc_sorted_neighborhood",
@@ -168,20 +169,6 @@ HEADLINE = [
     "doc_quality_survival_curve",
     "emb_codebook_drift",
     "doc_minhash_band_curve",
-]
-
-# HEADLINE is FROZEN per round: round-over-round BENCH comparisons are 1:1
-# on the frozen set — no more shared-subset arithmetic.  New queries bench
-# in INCOMING (timed identically, reported separately as
-# incoming_total_wall) and graduate into HEADLINE only by an explicit
-# freeze bump recorded here, never silently.
-#
-# r10 freeze bump: the 14 round-9 INCOMING entries graduate (below); the
-# first 93 names remain exactly the r9-frozen set, so the r9-comparable
-# subtotal is still reported (r9_headline_subtotal in BENCH_DETAIL.json).
-R9_HEADLINE_N = 93
-HEADLINE += [
-    # graduated r9 incoming (order preserved from the r9 INCOMING list)
     "stream_heavy_hitters",
     "stream_session_window",
     "emb_kmeans_convergence",
@@ -196,14 +183,6 @@ HEADLINE += [
     "rel_text_formats_roundtrip",
     "emb_prefix_dim_recall",
     "eth_erc20_balances",
-]
-HEADLINE_FREEZE = "r12"
-# r11 freeze bump: the 13 round-10 INCOMING entries graduate (below); the
-# first R10_HEADLINE_N names are exactly the r10-frozen set, so the
-# r10-comparable subtotal is still reported (r10_headline_subtotal).
-R10_HEADLINE_N = len(HEADLINE)
-HEADLINE += [
-    # graduated r10 incoming (order preserved from the r10 INCOMING list)
     "eth_balance_snapshot_merge",
     "eth_log_topic_profile",
     "stream_ewma_user",
@@ -217,13 +196,6 @@ HEADLINE += [
     "stream_erc20_balance_upsert",
     "doc_shingle_novelty",
     "doc_source_vocab_overlap",
-]
-# r12 freeze bump: the 14 round-11 INCOMING entries graduate (below); the
-# first R11_HEADLINE_N names are exactly the r11-frozen set, so the
-# r11-comparable subtotal (raw + probe-normalized) is still reported.
-R11_HEADLINE_N = len(HEADLINE)
-HEADLINE += [
-    # graduated r11 incoming (order preserved from the r11 INCOMING list)
     "stream_balance_rpc_tail",
     "multimodal_png_decode_stats",
     "multimodal_png_corrupt_screen",
@@ -438,7 +410,7 @@ def adjudication_queue(
     """SCALE.md §6d's adjudication policy, SELF-EXECUTING (VERDICT r12
     #2): any headline entry whose cross-round RAW ratio exceeds 2x AND
     whose current median exceeds 2 s is queued for
-    ``scripts/adjudicate_movers.py --queries <q> --baseline <prev round's
+    ``scripts/time_battery.py <sf_dir> <q> --baseline <prev round's
     closing commit>``.  Sub-2 s entries stay un-queued however hard they
     swing — the measured same-day noise floor (§6e/§6f: single-query
     swings to 2.97x on identical code) makes paired sessions on them pure
@@ -580,21 +552,6 @@ def main() -> None:
         # INCOMING entries are timed identically but totaled separately
         "value": headline_wall,
         "incoming_total_wall": incoming_wall,
-        # 1:1 comparability with BENCH_r09/r10: name prefixes are exactly
-        # the respective frozen sets
-        "r9_headline_subtotal": round(
-            sum(times[n] for n in HEADLINE[:R9_HEADLINE_N]), 3
-        ),
-        "r10_headline_subtotal": round(
-            sum(times[n] for n in HEADLINE[:R10_HEADLINE_N]), 3
-        ),
-        "r11_headline_subtotal": round(
-            sum(times[n] for n in HEADLINE[:R11_HEADLINE_N]), 3
-        ),
-        "r11_headline_norm_subtotal": round(
-            sum(times_norm[n] for n in HEADLINE[:R11_HEADLINE_N]), 3
-        ),
-        "headline_freeze": HEADLINE_FREEZE,
         "incoming": INCOMING,
         "unit": "sec",
         "queries": times,
@@ -631,8 +588,8 @@ def main() -> None:
     if queue:
         print(
             f"# ADJUDICATE (>2x raw vs r{prev_round}, >2s median): "
-            f"{','.join(queue)} -> python3 scripts/adjudicate_movers.py "
-            f"--queries {','.join(queue)} --baseline <r{prev_round} commit>",
+            f"{','.join(queue)} -> python3 scripts/time_battery.py "
+            f"{sf_dir} {' '.join(queue)} --baseline <r{prev_round} commit>",
             file=sys.stderr,
         )
     out_path = here / "BENCH_DETAIL.json"

@@ -3,7 +3,7 @@
 under session configurations the engine does NOT control when the driver
 builds its own SparkSession.
 
-Modes (pass one or more as arguments; default: both):
+Modes (pass one or more as arguments; default: all four):
   tz       — session timezone America/New_York instead of UTC
              (catches TIMESTAMP_LTZ leaks: date_trunc / unix_timestamp /
              timestamp_micros on the wrong type shift values silently)
@@ -27,31 +27,25 @@ Usage: python3 scripts/audit_robustness.py [tz|shuffle ...] [--sf DIR]
 from __future__ import annotations
 
 import sys
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+from check_battery import check
 
-import presto_ethereum_spark.session as S  # noqa: E402
-
+# the Spark confs of each mode, on top of get_spark's defaults
 MODES = {
-    "tz": {"extra_conf": {"spark.sql.session.timeZone": "America/New_York"}},
-    "shuffle": {"shuffle_partitions": 7},
+    "tz": {"spark.sql.session.timeZone": "America/New_York"},
+    "shuffle": {"spark.sql.shuffle.partitions": "7"},
     # legacy non-ANSI mode: integer overflow wraps silently, size(NULL)
     # returns -1 (legacy.sizeOfNull), casts are lenient — the divergence
     # class the r8 review found in quality_survival_curve's token column
     # (ANSI default hid it); this mode makes the whole battery prove its
     # results don't depend on ANSI guards
     "ansi": {
-        "extra_conf": {
-            "spark.sql.ansi.enabled": "false",
-            "spark.sql.legacy.sizeOfNull": "true",
-        }
+        "spark.sql.ansi.enabled": "false",
+        "spark.sql.legacy.sizeOfNull": "true",
     },
     "split": {
-        "extra_conf": {
-            "spark.sql.files.maxPartitionBytes": "131072",
-            "spark.sql.files.openCostInBytes": "0",
-        }
+        "spark.sql.files.maxPartitionBytes": "131072",
+        "spark.sql.files.openCostInBytes": "0",
     },
 }
 
@@ -68,44 +62,11 @@ def main() -> None:
         i = args.index("--queries")
         queries = [q for q in args[i + 1].split(",") if q]
         del args[i : i + 2]
-    modes = args or list(MODES)
-
-    orig = S.get_spark
     failures = 0
-    for mode in modes:
-        override = MODES[mode]
-
-        def patched(*a, **kw):
-            kw.pop("shuffle_partitions", None)
-            extra = kw.pop("extra_conf", None) or {}
-            extra.update(override.get("extra_conf", {}))
-            return orig(
-                *a,
-                shuffle_partitions=override.get("shuffle_partitions"),
-                extra_conf=extra,
-                **kw,
-            )
-
-        S.get_spark = patched
-        import scripts.check_battery as cb
-
-        cb.get_spark = patched
+    for mode in args or list(MODES):
         print(f"=== audit mode: {mode} ===")
-        saved = sys.argv
-        sys.argv = ["check", sf_dir, *queries]
-        try:
-            cb.main()
-        except SystemExit as e:
-            failures += int(bool(e.code))
-        finally:
-            sys.argv = saved
-            S.get_spark = orig
-            # a fresh mode needs a fresh JVM conf — stop the session
-            from pyspark.sql import SparkSession
-
-            active = SparkSession.getActiveSession()
-            if active is not None:
-                active.stop()
+        # check() stops its session: each mode starts a fresh one
+        failures += bool(check(sf_dir, set(queries), MODES[mode]))
     sys.exit(1 if failures else 0)
 
 

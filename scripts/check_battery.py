@@ -10,14 +10,10 @@ from __future__ import annotations
 
 import math
 import sys
-from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-from presto_ethereum_spark.plans import battery  # noqa: E402
-from presto_ethereum_spark.session import get_spark  # noqa: E402
+import harness
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -95,8 +91,16 @@ def compare(name, spark_df, duck_rel) -> str:
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
-    spark = get_spark(app_name="check-battery")
+    sys.exit(1 if check(sf_dir, set(sys.argv[2:])) else 0)
+
+
+def check(sf_dir, names, conf=None) -> int:
+    """Compare ``names`` (all entries if empty) on a harness session
+    with Spark confs ``conf`` against DuckDB; print one verdict per entry
+    and the totals, stop the session and return the number failing."""
+    spark = harness.session(extra_conf=conf)
+    from presto_ethereum_spark.plans import battery
+
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -105,7 +109,7 @@ def main():
     queries, oracles = battery.queries(), battery.oracles()
     n_ok = n_fail = 0
     for name, fn in queries.items():
-        if only and name not in only:
+        if names and name not in names:
             continue
         try:
             df = fn(spark, sf_dir)
@@ -121,7 +125,8 @@ def main():
         n_fail += not ok
         print(f"{name:36s} {verdict}")
     print(f"\n{n_ok} ok, {n_fail} failing")
-    sys.exit(1 if n_fail else 0)
+    spark.stop()
+    return n_fail
 
 
 if __name__ == "__main__":

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Physical-plan audit: the reproducible evidence behind SCALE.md.
 
-For each battery query (default: the bench headline set), prints the plan
+For each battery query (default: the list below), prints the plan
 markers that matter at 100 TB:
 
 - PushedFilters      — predicates reached the parquet scan
@@ -11,20 +11,19 @@ markers that matter at 100 TB:
 - WindowGroupLimit / TakeOrderedAndProject — top-k never globally sorts
 - Exchange count     — total shuffles in the plan
 
-Usage: python3 scripts/plan_audit.py [sf_dir] [query ...]
+``--out DIR SUFFIX`` also writes each plan, ``explain("formatted")``, to
+``DIR/<query>_<SUFFIX>.txt``: the plan evidence of an optimization
+(plans/r13/<q>_before.txt / _after.txt).
+
+Usage: python3 scripts/plan_audit.py sf_dir [query ...] [--out DIR SUFFIX]
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
-import sys
+import argparse
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-from presto_ethereum_spark.plans import battery  # noqa: E402
-from presto_ethereum_spark.session import get_spark  # noqa: E402
+import harness
 
 DEFAULT = [
     "rel_pricing_summary",
@@ -45,19 +44,24 @@ DEFAULT = [
 
 
 def main() -> None:
-    argv = sys.argv[1:]
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    names = argv[1:] or DEFAULT
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir")
+    ap.add_argument("queries", nargs="*")
+    ap.add_argument("--out", nargs=2, metavar=("DIR", "SUFFIX"))
+    args = ap.parse_args()
+    if args.out:
+        Path(args.out[0]).mkdir(parents=True, exist_ok=True)
 
-    spark = get_spark()
+    spark = harness.session()
+    from presto_ethereum_spark.plans import battery
+
     qs = battery.queries()
     print(f"{'query':30s} {'pushed':6s} {'bhj':4s} {'smj':4s} {'nlj':4s} "
           f"{'topk':5s} {'exch':4s}")
-    for name in names:
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            qs[name](spark, sf_dir).explain("formatted")
-        p = buf.getvalue()
+    for name in args.queries or DEFAULT:
+        p = harness.plan_text(qs[name](spark, args.sf_dir))
+        if args.out:
+            Path(args.out[0], f"{name}_{args.out[1]}.txt").write_text(p)
         pushed = "PushedFilters: [" in p and "PushedFilters: []" not in p
         topk = ("WindowGroupLimit" in p) or ("TakeOrderedAndProject" in p)
         print(

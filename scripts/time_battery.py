@@ -1,56 +1,142 @@
 #!/usr/bin/env python3
-"""Time every battery query on Spark at a given SF dir (default sf0.1).
+"""Warm-median wall time of battery entries (noop write; one untimed
+warmup, then N timed runs with a GC drain before each).
 
-Prints one line per query (seconds, row count) sorted by descending wall
-time, then a total.  This is the perf feedback loop: the driver benches
-headline queries per round; this script finds the outliers across the FULL
-battery so slow plans get fixed before they matter.
+    time_battery.py sf_dir [entry ...] [--repeats N] [--out FILE]
+        one session on this checkout, the slowest entry first; all entries
+        if none are named.
+    ... --cpus HIGH,LOW
+        a fresh session per core count; reports each entry's LOW/HIGH
+        median ratio (well above 1: its work spreads over cores; about 1:
+        serial or fixed overhead at this scale).
+    ... --baseline COMMIT
+        per entry, a fresh session on this checkout, then one on a git
+        worktree of COMMIT, back to back.  Reports the paired normalized
+        ratio (median / session probe median here, over the same on
+        COMMIT): host speed divides out, so about 1.0 means host drift.
 
-Usage: python3 scripts/time_battery.py [sf_dir] [query ...]
+Exits 1 if any entry fails.  ``--out`` also writes the report as JSON.
 """
 
 from __future__ import annotations
 
+import argparse
+import json
+import os
+import subprocess
 import sys
-import time
-from pathlib import Path
+import tempfile
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+import harness
 
-from presto_ethereum_spark.plans import battery  # noqa: E402
-from presto_ethereum_spark.session import get_spark  # noqa: E402
+
+def measure(root: str, args, probe: bool = False) -> dict:
+    """Time the entries (all if none are named) in one session on ``root``;
+    with ``probe``, also the session's calibration-probe median."""
+    spark = harness.session(root)
+    from presto_ethereum_spark.plans import battery
+
+    qs, sf = battery.queries(), args.sf_dir
+    harness.warm(spark, sf)
+    out = {"probe": harness.probe_median(spark)} if probe else {}
+    for name in args.entries or qs:
+        try:
+            out[name] = harness.time_entry(
+                spark, lambda: harness.noop(qs[name](spark, sf)), args.repeats
+            )
+        except Exception as exc:  # keep timing the rest
+            out[name] = {"error": f"{type(exc).__name__}: {str(exc)[:300]}"}
+        print(f"# {name}: {out[name]}", file=sys.stderr, flush=True)
+    return out
+
+
+def child(args, root: str, names: list[str], cpus: int | None = None) -> dict:
+    """``measure(root, ..., probe=True)`` in a fresh interpreter."""
+    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus)) if cpus else None
+    argv = [__file__, args.sf_dir, *names, "--repeats", str(args.repeats)]
+    return harness.run_child([*argv, "--child", root], env)
+
+
+def scaling(args) -> list[dict]:
+    high, low = args.cpus
+    runs = {c: child(args, harness.ROOT, args.entries, c) for c in (high, low)}
+    report = []
+    for q in [q for q in runs[high] if q != "probe"]:
+        hi, lo = runs[high][q].get("median"), runs[low][q].get("median")
+        report.append(
+            {
+                "entry": q,
+                f"c{high}": runs[high][q],
+                f"c{low}": runs[low][q],
+                "ratio": round(lo / hi, 3) if lo and hi else None,
+            }
+        )
+    return report
+
+
+def paired(args) -> list[dict]:
+    base_root = tempfile.mkdtemp(prefix="baseline_")
+    git = ["git", "-C", harness.ROOT, "worktree"]
+    subprocess.run([*git, "add", "--detach", base_root, args.baseline], check=True)
+    report = []
+    try:
+        for q in args.entries:
+            # back to back, so both sessions share one host window
+            head = child(args, harness.ROOT, [q])
+            base = child(args, base_root, [q])
+            h, b = head[q].get("median"), base[q].get("median")
+            report.append(
+                {
+                    "entry": q,
+                    "baseline": args.baseline,
+                    "head": {**head[q], "probe": head["probe"]},
+                    "base": {**base[q], "probe": base["probe"]},
+                    "ratio": round(h / head["probe"] / (b / base["probe"]), 3)
+                    if h and b
+                    else None,
+                }
+            )
+            print(json.dumps(report[-1]), file=sys.stderr, flush=True)
+    finally:
+        subprocess.run([*git, "remove", "--force", base_root], check=True)
+    return report
 
 
 def main() -> None:
-    argv = sys.argv[1:]
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.1"
-    only = set(argv[1:])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir")
+    ap.add_argument("entries", nargs="*")
+    ap.add_argument("--repeats", type=int, default=3)
+    ap.add_argument("--cpus", type=lambda s: [int(c) for c in s.split(",")])
+    ap.add_argument("--baseline")
+    ap.add_argument("--out")
+    ap.add_argument("--child", help=argparse.SUPPRESS)
+    args = ap.parse_args()
+    if args.baseline and not args.entries:
+        ap.error("--baseline needs the entries to pair")
 
-    spark = get_spark()
-    qs = battery.queries()
-    if only:
-        qs = {k: v for k, v in qs.items() if k in only}
-
-    # warm the JVM + Python worker pool once so per-query numbers are steady
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    timings: list[tuple[str, float, int]] = []
-    for name, fn in qs.items():
-        t0 = time.monotonic()
-        try:
-            n = fn(spark, sf_dir).count()
-        except Exception as exc:  # keep timing the rest
-            print(f"{name:36s} FAIL {exc}", flush=True)
-            continue
-        dt = time.monotonic() - t0
-        timings.append((name, dt, n))
-        print(f"{name:36s} {dt:7.2f}s  {n} rows", flush=True)
-
-    timings.sort(key=lambda t: -t[1])
-    print("\n=== slowest first ===")
-    for name, dt, n in timings:
-        print(f"{name:36s} {dt:7.2f}s  {n} rows")
-    print(f"\nTOTAL {sum(t[1] for t in timings):.1f}s over {len(timings)} queries")
+    if args.child:
+        print(json.dumps(measure(args.child, args, probe=True)))
+        return
+    if args.cpus or args.baseline:
+        report = scaling(args) if args.cpus else paired(args)
+        failed = [r["entry"] for r in report if r["ratio"] is None]
+        print("\n".join(json.dumps(r) for r in report))
+    else:
+        runs = measure(harness.ROOT, args)
+        report = sorted(
+            ({"entry": q, **r} for q, r in runs.items()),
+            key=lambda r: -r.get("median", 0),
+        )
+        failed = [r["entry"] for r in report if "error" in r]
+        for r in report:
+            timing = f"{r['median']:7.2f}s  {r['spread']}" if "median" in r else ""
+            print(f"{r['entry']:36s} {timing or 'FAIL ' + r['error']}")
+        print(f"\n{len(report)} entries, {len(failed)} failing")
+    if args.out:
+        with open(args.out, "w") as f:
+            f.write(json.dumps(report, indent=1) + "\n")
+    sys.exit(1 if failed else 0)
 
 
 if __name__ == "__main__":

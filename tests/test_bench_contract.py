@@ -7,6 +7,7 @@ signature is pinned so an accidental edit that would invalidate every
 cross-round normalized comparison turns pytest red.
 """
 
+import hashlib
 import sys
 from pathlib import Path
 
@@ -23,9 +24,10 @@ def test_headline_and_incoming_are_registered_and_disjoint():
     assert missing == []
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)
     assert not set(bench.HEADLINE) & set(bench.INCOMING)
-    # frozen-prefix invariants the subtotal comparisons rely on
-    assert bench.R9_HEADLINE_N == 93
-    assert bench.R10_HEADLINE_N == 107
+    # the frozen set itself: same names, same order
+    assert len(bench.HEADLINE) == 134
+    digest = hashlib.sha256("\n".join(bench.HEADLINE).encode()).hexdigest()
+    assert digest.startswith("ddd7ea68382b40c4")
 
 
 def test_iterative_set_is_registered():
@@ -52,51 +54,6 @@ def test_calibration_probe_is_frozen(spark):
     assert 990 <= n_groups <= 1993
     # and the probe function itself executes without error
     bench.calibration_probe(spark)
-
-
-def test_adjudicate_probe_copy_is_byte_equal():
-    """scripts/adjudicate_movers.py carries a verbatim copy of the frozen
-    probe (so the r10-worktree child can run it without importing HEAD's
-    bench module, whose import-time sys.path insert would shadow the
-    worktree's package).  The copy must stay byte-equal in body to the
-    original or every paired-normalized adjudication number is invalid."""
-    import importlib.util
-    import inspect
-
-    spec = importlib.util.spec_from_file_location(
-        "adjudicate_movers",
-        Path(__file__).resolve().parent.parent / "scripts" / "adjudicate_movers.py",
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    def body_dump(fn):
-        # ADVICE r12 #4: compare the PARSED function bodies (docstring
-        # Expr dropped), not line-stripped source — str.replace of
-        # docstring fragments could mangle code lines that coincide with
-        # a fragment, and line stripping tolerated real drift
-        # (whitespace-significant changes, constants edited in both
-        # docstring and code).  ast.dump is exact on structure and
-        # constants and blind only to comments/formatting, which cannot
-        # change what the probe measures.
-        import ast
-        import textwrap
-
-        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
-        fdef = tree.body[0]
-        body = fdef.body
-        if (
-            body
-            and isinstance(body[0], ast.Expr)
-            and isinstance(body[0].value, ast.Constant)
-            and isinstance(body[0].value.value, str)
-        ):
-            body = body[1:]
-        return [ast.dump(node) for node in body]
-
-    assert body_dump(mod.calibration_probe) == body_dump(
-        bench.calibration_probe
-    )
 
 
 def test_adjudication_queue_policy():
