@@ -3,10 +3,15 @@ re-expressed Spark-first.
 
 Two classes:
 
-- **Pure math** (``fromWei``/``toWei``): vectorized Arrow ``pandas_udf``s —
-  no RPC, deterministic, safe anywhere in a plan.  Unit names are matched
-  case-insensitively; unknown units raise (EthereumUDFs.java:121-122 /
-  enum valueOf semantics).
+- **Pure math** (``fromWei``/``toWei``): plain Catalyst expressions — no
+  RPC, no Python worker, deterministic, safe anywhere in a plan.
+  ``register_udfs`` registers them as SQL functions (``CREATE TEMPORARY
+  FUNCTION``), which Spark inlines into the plan; ``from_wei``/``to_wei``
+  build the same expression as a Column.  Both come from the one
+  ``WEI_UNIT_FACTORS`` table, so a literal unit folds to a constant
+  factor.  Unit names are matched case-insensitively; an unknown or NULL
+  unit raises ``Unknown wei unit`` on every row, NULL values included
+  (EthereumUDFs.java:121-122 / enum valueOf semantics).
 
 - **Chain state** (``eth_gasPrice``, ``eth_blockNumber``, ``eth_getBalance``,
   ``eth_getTransactionCount``, ``isContract``): each call in the reference is
@@ -33,11 +38,12 @@ signature with an optional second argument accepting int | str | None.
 from __future__ import annotations
 
 import numbers
+import operator
 import os
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, LongType
 
@@ -61,27 +67,41 @@ __all__ = [
 # ---------------------------------------------------------------------------
 
 
-def _unit_factors(units: pd.Series) -> pd.Series:
-    upper = units.str.upper()
-    bad = ~upper.isin(WEI_UNIT_FACTORS)
-    if bad.any():
-        # enum valueOf semantics: unknown unit is an error, not null
-        raise ValueError(f"Unknown wei unit: {upper[bad].iloc[0]!r}")
-    return upper.map(WEI_UNIT_FACTORS)
+_UNKNOWN_UNIT = "Unknown wei unit: "
 
 
-@F.pandas_udf(DoubleType())
-def from_wei(num: pd.Series, unit: pd.Series) -> pd.Series:
-    """fromWei(value, unit) -> value / unit_factor (EthereumUDFs.java:117-124).
+def _wei_sql(op: str) -> str:
+    """The SQL body of ``fromWei`` (``op`` ``/``) or ``toWei`` (``*``) over
+    the parameters ``num`` and ``unit``.  The factor is checked before
+    ``num`` is read, so a bad unit raises even where the value is NULL."""
+    pairs = ", ".join(f"'{u}', {f!r}D" for u, f in WEI_UNIT_FACTORS.items())
+    factor = f"map({pairs})[upper(unit)]"
+    return (
+        f"CASE WHEN {factor} IS NULL THEN raise_error(concat("
+        f"'{_UNKNOWN_UNIT}', coalesce(upper(unit), 'NULL'))) "
+        f"ELSE num {op} {factor} END"
+    )
 
-    astype: SQL decimal literals arrive as ``decimal.Decimal`` objects."""
-    return num.astype("float64") / _unit_factors(unit)
+
+def _wei_col(num: Column | str, unit: Column | str, op) -> Column:
+    """:func:`_wei_sql` as a Column; string arguments name columns."""
+    num, unit = (F.col(c) if isinstance(c, str) else c for c in (num, unit))
+    pairs = [F.lit(x) for kv in WEI_UNIT_FACTORS.items() for x in kv]
+    factor = F.create_map(*pairs)[F.upper(unit)]
+    error = F.raise_error(
+        F.concat(F.lit(_UNKNOWN_UNIT), F.coalesce(F.upper(unit), F.lit("NULL")))
+    )
+    return F.when(factor.isNull(), error).otherwise(op(num.cast("double"), factor))
 
 
-@F.pandas_udf(DoubleType())
-def to_wei(num: pd.Series, unit: pd.Series) -> pd.Series:
+def from_wei(num: Column | str, unit: Column | str) -> Column:
+    """fromWei(value, unit) -> value / unit_factor (EthereumUDFs.java:117-124)."""
+    return _wei_col(num, unit, operator.truediv)
+
+
+def to_wei(num: Column | str, unit: Column | str) -> Column:
     """toWei(value, unit) -> value * unit_factor (EthereumUDFs.java:126-133)."""
-    return num.astype("float64") * _unit_factors(unit)
+    return _wei_col(num, unit, operator.mul)
 
 
 # ---------------------------------------------------------------------------
@@ -300,9 +320,14 @@ def register_udfs(
     spark: SparkSession, backend: ChainStateBackend | None = None
 ) -> None:
     """SQL-name registration for parity with EthereumPlugin.getFunctions()
-    (EthereumPlugin.java:17-20): ``SELECT fromWei(tx_value, 'ETHER') ...``."""
-    spark.udf.register("fromWei", from_wei)
-    spark.udf.register("toWei", to_wei)
+    (EthereumPlugin.java:17-20): ``SELECT fromWei(tx_value, 'ETHER') ...``.
+    ``fromWei``/``toWei`` are SQL functions, so they start no Python worker;
+    the chain-state UDFs are registered only with a ``backend``."""
+    for name, op in (("fromWei", "/"), ("toWei", "*")):
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}(num DOUBLE, unit STRING)"
+            f" RETURNS DOUBLE RETURN {_wei_sql(op)}"
+        )
     if backend is not None:
         for name, udf in make_chain_state_udfs(backend).items():
             spark.udf.register(name, udf)

@@ -2302,8 +2302,8 @@ def eth_log_topic_profile(spark: SparkSession, sf: str) -> DataFrame:
 )
 def eth_value_in_ether(spark: SparkSession, sf: str) -> DataFrame:
     """fromWei as used in SQL (udfs/EthereumUDFs.java:117-124): unit division
-    is exact double math, so the vectorized UDF matches the oracle's literal
-    division bit-for-bit."""
+    is exact double math, so the inlined expression (a literal unit folds
+    to its factor) matches the oracle's literal division bit-for-bit."""
     from presto_ethereum_spark.functions.web3 import from_wei
 
     tx = _eth_tables(spark).table("transaction")

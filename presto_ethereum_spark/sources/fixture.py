@@ -40,7 +40,14 @@ _DERIVE = {
 
 
 class EthereumFixtureSource:
-    """Loads the nested chain snapshot and exposes the three tables."""
+    """Loads the nested chain snapshot and exposes the three tables.
+
+    Each table is derived once per source: :meth:`table` returns the same
+    DataFrame on every call, and :meth:`register_views` registers those
+    DataFrames, so the decode tree (the ERC-20 token map and hex decode
+    included) is built and analysed once, not per query.  A derived table
+    is a pure function of :attr:`chain` and ``strict_varchar``, which are
+    fixed for the source's lifetime."""
 
     def __init__(
         self, spark: SparkSession, chain_path: str, strict_varchar: bool = False
@@ -54,6 +61,7 @@ class EthereumFixtureSource:
         self.chain_path = chain_path
         self.strict_varchar = strict_varchar
         self._chain: DataFrame | None = None
+        self._tables: dict[str, DataFrame] = {}
 
     @property
     def chain(self) -> DataFrame:
@@ -87,7 +95,10 @@ class EthereumFixtureSource:
         return truncate_varchar_bounds(out, name) if self.strict_varchar else out
 
     def table(self, name: str) -> DataFrame:
-        return self._derive(self.chain, name)
+        key = name.lower()
+        if key not in self._tables:
+            self._tables[key] = self._derive(self.chain, key)
+        return self._tables[key]
 
     def table_for_block_range(
         self, name: str, lo: int | None = None, hi: int | None = None

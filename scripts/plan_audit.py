@@ -10,6 +10,10 @@ markers that matter at 100 TB:
 - NestedLoop         — a range/cross predicate fell back to O(|L|*|R|)
 - WindowGroupLimit / TakeOrderedAndProject — top-k never globally sorts
 - Exchange count     — total shuffles in the plan
+- pyeval             — Python-worker nodes (ArrowEvalPython, BatchEvalPython,
+                       MapInPandas, FlatMapGroupsInPandas and their Arrow /
+                       cogroup / aggregate / window siblings): 0 means the
+                       entry's plan starts no Python worker outside its scans
 
 ``--out DIR SUFFIX`` also writes each plan, ``explain("formatted")``, to
 ``DIR/<query>_<SUFFIX>.txt``: the plan evidence of an optimization
@@ -21,6 +25,7 @@ Usage: python3 scripts/plan_audit.py sf_dir [query ...] [--out DIR SUFFIX]
 from __future__ import annotations
 
 import argparse
+import re
 from pathlib import Path
 
 import harness
@@ -42,6 +47,13 @@ DEFAULT = [
     "eth_erc20_movement",
 ]
 
+# node headers of the formatted plan's detail section: "(7) MapInPandas"
+PYEVAL = re.compile(
+    r"^\(\d+\) (?:ArrowEvalPython|BatchEvalPython|ArrowAggregatePython|"
+    r"ArrowWindowPython|MapIn(?:Pandas|Arrow)|FlatMap(?:Co)?GroupsIn(?:Pandas|Arrow))",
+    re.M,
+)
+
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
@@ -57,7 +69,7 @@ def main() -> None:
 
     qs = battery.queries()
     print(f"{'query':30s} {'pushed':6s} {'bhj':4s} {'smj':4s} {'nlj':4s} "
-          f"{'topk':5s} {'exch':4s}")
+          f"{'topk':5s} {'exch':4s} {'pyeval':6s}")
     for name in args.queries or DEFAULT:
         p = harness.plan_text(qs[name](spark, args.sf_dir))
         if args.out:
@@ -67,7 +79,7 @@ def main() -> None:
         print(
             f"{name:30s} {str(pushed):6s} {str('BroadcastHashJoin' in p):4s} "
             f"{str('SortMergeJoin' in p):4s} {str('NestedLoop' in p):4s} "
-            f"{str(topk):5s} {p.count('Exchange'):4d}"
+            f"{str(topk):5s} {p.count('Exchange'):4d} {len(PYEVAL.findall(p)):6d}"
         )
 
 

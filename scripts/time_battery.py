@@ -6,9 +6,10 @@ warmup, then N timed runs with a GC drain before each).
         one session on this checkout, the slowest entry first; all entries
         if none are named.
     ... --cpus HIGH,LOW
-        a fresh session per core count; reports each entry's LOW/HIGH
+        a fresh session per core count, both with HIGH shuffle partitions
+        (so only the core count differs); reports each entry's LOW/HIGH
         median ratio (well above 1: its work spreads over cores; about 1:
-        serial or fixed overhead at this scale).
+        serial or fixed overhead at this scale) and the partition count.
     ... --baseline COMMIT
         per entry, a fresh session on this checkout, then one on a git
         worktree of COMMIT, back to back.  Reports the paired normalized
@@ -32,13 +33,19 @@ import harness
 
 def measure(root: str, args, probe: bool = False) -> dict:
     """Time the entries (all if none are named) in one session on ``root``;
-    with ``probe``, also the session's calibration-probe median."""
-    spark = harness.session(root)
+    with ``probe``, also the session's calibration-probe median and its
+    shuffle partition count.  Under ``--cpus HIGH,LOW`` the session shuffles
+    into HIGH partitions whatever its core count."""
+    conf = {"spark.sql.shuffle.partitions": str(args.cpus[0])} if args.cpus else None
+    spark = harness.session(root, conf)
     from presto_ethereum_spark.plans import battery
 
     qs, sf = battery.queries(), args.sf_dir
     harness.warm(spark, sf)
-    out = {"probe": harness.probe_median(spark)} if probe else {}
+    out = {}
+    if probe:
+        out["probe"] = harness.probe_median(spark)
+        out["shuffle_partitions"] = int(spark.conf.get("spark.sql.shuffle.partitions"))
     for name in args.entries or qs:
         try:
             out[name] = harness.time_entry(
@@ -54,6 +61,8 @@ def child(args, root: str, names: list[str], cpus: int | None = None) -> dict:
     """``measure(root, ..., probe=True)`` in a fresh interpreter."""
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus)) if cpus else None
     argv = [__file__, args.sf_dir, *names, "--repeats", str(args.repeats)]
+    if args.cpus:
+        argv += ["--cpus", ",".join(map(str, args.cpus))]
     return harness.run_child([*argv, "--child", root], env)
 
 
@@ -61,11 +70,15 @@ def scaling(args) -> list[dict]:
     high, low = args.cpus
     runs = {c: child(args, harness.ROOT, args.entries, c) for c in (high, low)}
     report = []
-    for q in [q for q in runs[high] if q != "probe"]:
+    session_keys = ("probe", "shuffle_partitions")
+    for q in [q for q in runs[high] if q not in session_keys]:
         hi, lo = runs[high][q].get("median"), runs[low][q].get("median")
         report.append(
             {
                 "entry": q,
+                "shuffle_partitions": {
+                    f"c{c}": runs[c]["shuffle_partitions"] for c in (high, low)
+                },
                 f"c{high}": runs[high][q],
                 f"c{low}": runs[low][q],
                 "ratio": round(lo / hi, 3) if lo and hi else None,

@@ -3,6 +3,7 @@ incl. aliases and case-insensitivity, round-trip property, unknown-unit
 error, and the 5 chain-state functions over the hermetic fixture backend."""
 
 import json
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -78,6 +79,74 @@ def test_unknown_unit_raises(spark):
     df = spark.createDataFrame([Row(v=1.0)])
     with pytest.raises(Exception, match="Unknown wei unit"):
         df.select(from_wei(F.col("v"), F.lit("PARSEC"))).collect()
+
+
+def _wei_forms(value: str, unit: str) -> list:
+    """fromWei/toWei over the SQL operands ``value`` and ``unit``, each as
+    the Column form and as the registered SQL function."""
+    v, u = F.expr(value), F.expr(unit)
+    return [
+        from_wei(v, u),
+        F.expr(f"fromWei({value}, {unit})"),
+        to_wei(v, u),
+        F.expr(f"toWei({value}, {unit})"),
+    ]
+
+
+@pytest.mark.parametrize(
+    "value, unit",
+    [
+        ("CAST(NULL AS DOUBLE)", "'PARSEC'"),
+        ("1.0D", "CAST(NULL AS STRING)"),
+        ("CAST(NULL AS DOUBLE)", "CAST(NULL AS STRING)"),
+    ],
+)
+def test_bad_unit_raises_on_every_row(spark, value, unit):
+    """An unknown or NULL unit is an error (enum valueOf semantics), also on
+    a row whose value is NULL: the unit is checked before the value."""
+    register_udfs(spark)
+    for col in _wei_forms(value, unit):
+        with pytest.raises(Exception, match="Unknown wei unit"):
+            spark.range(1).select(col).collect()
+
+
+def test_null_value_with_valid_unit_is_null(spark):
+    register_udfs(spark)
+    row = spark.range(1).select(
+        *_wei_forms("CAST(NULL AS DOUBLE)", "'eTher'"),
+        *_wei_forms("2e18", "'eTher'"),
+    ).first()
+    assert list(row) == [None] * 4 + [2.0, 2.0, 2e36, 2e36]
+
+
+D33 = "123456789012345678901234567890123"  # a 33-digit DECIMAL literal
+# SQL operand -> its Python value: the conversions must equal double math
+# on float(value), bit for bit, whatever the operand's SQL type
+BIT_CASES = [
+    ("123.456D", 123.456),
+    ("9007199254740993L", 2**53 + 1),  # BIGINT above 2^53: rounds on cast
+    ("0.1", Decimal("0.1")),
+    (D33, Decimal(D33)),
+    ("'4.2e21'", "4.2e21"),  # numeric STRING
+]
+
+
+def test_wei_bit_identical_to_double_math(spark):
+    register_udfs(spark)
+    units = spark.createDataFrame([(u,) for u in WEI_UNIT_FACTORS], "unit string")
+    cols = [
+        c.alias(f"c{i}_{j}")
+        for i, (sql, _) in enumerate(BIT_CASES)
+        for j, c in enumerate(_wei_forms(sql, "unit"))
+    ]
+    rows = units.select("unit", *cols).collect()  # one job
+    assert len(rows) == len(WEI_UNIT_FACTORS)
+    for r in rows:
+        f = WEI_UNIT_FACTORS[r.unit]
+        for i, (_, x) in enumerate(BIT_CASES):
+            want = [float(x) / f] * 2 + [float(x) * f] * 2
+            got = [r[f"c{i}_{j}"] for j in range(4)]
+            assert got == want, (r.unit, BIT_CASES[i][0])
 
 
 @pytest.fixture(scope="module")

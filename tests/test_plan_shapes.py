@@ -8,11 +8,15 @@ pushed parquet filters.  scripts/plan_audit.py remains the wide
 diagnostic sweep.
 """
 
+import ast
+from pathlib import Path
+
 import pytest
 
 from presto_ethereum_spark.plans import battery
 
 SF = "/root/testdata/sf0.001"
+PYTHON_EVAL = ("ArrowEvalPython", "BatchEvalPython")
 
 
 def _plan(spark, name: str) -> str:
@@ -378,3 +382,47 @@ def test_no_reshingle_in_pushed_filters(spark):
             if "Filter" in line and "transform(sequence(" in line
         ]
         assert not bad, f"{name}: shingle expression re-derived in a Filter:\n" + "\n".join(bad[:2])
+
+
+def _chain_sql_wei_sql() -> str:
+    """``ChainSql.WEI_SQL`` of the benchmark, read from its source: importing
+    ``perfbench/workloads.py`` would bring in its own ``harness`` module."""
+    src = Path(__file__).resolve().parent.parent / "perfbench" / "workloads.py"
+    for node in ast.walk(ast.parse(src.read_text())):
+        if isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == "WEI_SQL" for t in node.targets
+        ):
+            return ast.literal_eval(node.value)
+    raise AssertionError("ChainSql.WEI_SQL not found")
+
+
+def test_wei_conversions_start_no_python_worker(spark, chain_source):
+    """fromWei/toWei are SQL functions inlined into the plan: neither the
+    benchmark's wei query over the fixture views nor the battery's
+    fromWei entry may plan a Python evaluation node."""
+    from presto_ethereum_spark.functions import register_udfs
+
+    chain_source.register_views()
+    register_udfs(spark)
+    wei = spark.sql(_chain_sql_wei_sql())._jdf.queryExecution().executedPlan()
+    for name, plan in (
+        ("WEI_SQL", wei.toString()),
+        ("eth_value_in_ether", _plan(spark, "eth_value_in_ether")),
+    ):
+        assert not [n for n in PYTHON_EVAL if n in plan], f"{name}:\n{plan}"
+    assert "/ 1.0E18" in wei.toString()  # the literal unit folded to its factor
+
+
+def test_fixture_tables_derived_once(spark, chain_source):
+    """One derive per table and source: table() hands back the same
+    DataFrame whatever the name's case, and the registered view resolves
+    to that DataFrame's plan (the same output attributes, not a re-derived
+    copy with new ones)."""
+    erc20 = chain_source.table("erc20")
+    assert erc20 is chain_source.table("ERC20")
+    chain_source.register_views()
+
+    def output(df):
+        return df._jdf.queryExecution().analyzed().output().toString()
+
+    assert output(spark.table("erc20")) == output(erc20)

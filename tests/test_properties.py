@@ -1,17 +1,18 @@
 """Property-based tests (SURVEY.md §5.4): hypothesis drives the engine's
-actual worker-side callables (the pandas batches Spark ships to executors)
-and the pushdown-invariance contract.
+actual worker-side callables (the pandas batches Spark ships to executors),
+the wei conversions and the pushdown-invariance contract.
 
 The pandas-level properties run hundreds of examples with no JVM round-trip
 — the callable under test is byte-for-byte the one the pandas UDF executes.
-The Spark-level invariance property keeps examples few but end-to-end.
+The wei conversions are Catalyst expressions, so their hundreds of drawn
+examples are collected first and checked in one Spark job.  The
+Spark-level invariance property keeps examples few but end-to-end.
 """
 
 from __future__ import annotations
 
 import math
 
-import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -27,42 +28,74 @@ UNITS = sorted(WEI_UNIT_FACTORS)
 # ---------------------------------------------------------------------------
 
 
-def _pandas_fn(pudf):
-    """The Python callable inside a pandas_udf (what executors run)."""
-    return pudf.func
-
-
-@given(
-    vals=st.lists(
-        st.floats(
-            min_value=1e-9, max_value=1e30, allow_nan=False, allow_infinity=False
-        ),
-        min_size=1,
-        max_size=64,
-    ),
-    unit=st.sampled_from(UNITS),
-)
-@settings(max_examples=200, deadline=None)
-def test_wei_round_trip(vals, unit):
+def _wei_forms():
+    """(fromWei, toWei) pairs: the Column form and the registered SQL
+    function called by name."""
     from presto_ethereum_spark.functions.web3 import from_wei, to_wei
 
-    fw, tw = _pandas_fn(from_wei), _pandas_fn(to_wei)
-    v = pd.Series(vals, dtype="float64")
-    u = pd.Series([unit] * len(vals))
-    rt = fw(tw(v, u), u)
-    assert all(
-        math.isclose(a, b, rel_tol=1e-12) for a, b in zip(rt, v)
-    ), f"round trip drifted for unit {unit}"
+    return [
+        (from_wei, to_wei),
+        (
+            lambda x, u: F.call_function("fromWei", x, u),
+            lambda x, u: F.call_function("toWei", x, u),
+        ),
+    ]
 
 
-@given(unit=st.sampled_from(UNITS))
-@settings(max_examples=len(UNITS), deadline=None)
-def test_from_wei_one_wei_is_inverse_factor(unit):
-    from presto_ethereum_spark.functions.web3 import from_wei
+def _drawn(strategy, max_examples: int) -> list:
+    """Every example hypothesis draws from ``strategy``, collected without
+    Spark, so all of them can be checked in one Spark job."""
+    out: list = []
 
-    fw = _pandas_fn(from_wei)
-    out = fw(pd.Series([1.0]), pd.Series([unit]))
-    assert out.iloc[0] == 1.0 / WEI_UNIT_FACTORS[unit]
+    @given(strategy)
+    @settings(max_examples=max_examples, deadline=None, database=None)
+    def collect(example):
+        out.append(example)
+
+    collect()
+    return out
+
+
+def test_wei_round_trip(spark):
+    from presto_ethereum_spark.functions.web3 import register_udfs
+
+    register_udfs(spark)
+    draws = _drawn(
+        st.tuples(
+            st.lists(
+                st.floats(
+                    min_value=1e-9, max_value=1e30, allow_nan=False, allow_infinity=False
+                ),
+                min_size=1,
+                max_size=64,
+            ),
+            st.sampled_from(UNITS),
+        ),
+        max_examples=200,
+    )
+    rows = [(v, unit) for vals, unit in draws for v in vals]
+    df = spark.createDataFrame(rows, "v double, unit string")
+    v, u = F.col("v"), F.col("unit")
+    out = df.select(
+        "v", "unit", *(fw(tw(v, u), u) for fw, tw in _wei_forms())
+    ).collect()  # one job
+    assert len(out) == len(rows)
+    for r in out:
+        assert all(
+            math.isclose(rt, r.v, rel_tol=1e-12) for rt in r[2:]
+        ), f"round trip drifted for unit {r.unit}: {r.v!r} -> {list(r[2:])}"
+
+
+def test_from_wei_one_wei_is_inverse_factor(spark):
+    from presto_ethereum_spark.functions.web3 import register_udfs
+
+    register_udfs(spark)
+    df = spark.createDataFrame([(1.0, u) for u in UNITS], "v double, unit string")
+    v, u = F.col("v"), F.col("unit")
+    out = df.select("unit", *(fw(v, u) for fw, _ in _wei_forms())).collect()
+    assert sorted(r.unit for r in out) == UNITS
+    for r in out:
+        assert list(r[1:]) == [1.0 / WEI_UNIT_FACTORS[r.unit]] * 2, r.unit
 
 
 # ---------------------------------------------------------------------------
