@@ -26,6 +26,7 @@ why the plan survives 1000 executors.
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Callable
 from pathlib import Path
 
@@ -862,11 +863,20 @@ def rel_pivot_status_priority(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+_ETH_SOURCES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def _eth_tables(spark: SparkSession):
+    """The fixture chain source of ``spark``, one per session: every
+    ``eth_*`` entry shares its chain scan and its tables, each derived
+    once (EthereumFixtureSource.table)."""
     from presto_ethereum_spark.sources.fixture import EthereumFixtureSource
 
-    src = EthereumFixtureSource(spark, str(ETH / "chain_blocks.parquet"))
-    return src
+    if spark not in _ETH_SOURCES:
+        _ETH_SOURCES[spark] = EthereumFixtureSource(
+            spark, str(ETH / "chain_blocks.parquet")
+        )
+    return _ETH_SOURCES[spark]
 
 
 @q(
@@ -1218,15 +1228,6 @@ def eth_token_flows(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _erc20_transfer_deltas(chain: DataFrame) -> DataFrame:
-    """Shared ledger-delta decode for the balance family — lives in
-    sources/decode.py so the streaming balance upsert reuses the identical
-    exact-Decimal path (one decode, three graded consumers)."""
-    from presto_ethereum_spark.sources.decode import erc20_transfer_deltas
-
-    return erc20_transfer_deltas(chain)
-
-
 _BALANCES_ORACLE = f"""
     WITH lg AS (
       SELECT unnest(t.logs) AS l
@@ -1286,7 +1287,9 @@ def eth_erc20_balances(spark: SparkSession, sf: str) -> DataFrame:
     at chain scale this is the incremental balance-snapshot job: merge
     yesterday's balances with today's deltas by the same additive
     state."""
-    d = _erc20_transfer_deltas(_eth_tables(spark).chain)
+    from presto_ethereum_spark.sources.decode import erc20_transfer_deltas
+
+    d = erc20_transfer_deltas(_eth_tables(spark).chain)
     return d.groupBy("token_address", "holder").agg(
         F.sum("is_in").cast("long").alias("n_in"),
         F.sum(1 - F.col("is_in")).cast("long").alias("n_out"),
@@ -1317,19 +1320,15 @@ def stream_balance_rpc_tail(spark: SparkSession, sf: str) -> DataFrame:
     ethereum-stream data source's raw-log table tails Transfer logs
     through the canned parquet transport — each micro-batch is ONE bulk
     eth_getLogs per block range, wire shape untouched — and
-    run_balance_upsert merges them through
-    decode.erc20_transfer_deltas_from_logs, the SAME exact-Decimal rules
-    the fixture-side entries use.  Graded against the identical one-pass
-    oracle as eth_erc20_balances, so the hash gate proves the standing
-    pipeline is source-agnostic: chain-dump micro-batches
-    (stream_erc20_balance_upsert) and live-RPC log micro-batches settle
-    to the same ledger bit-for-bit.  max_blocks_per_batch=800 over the
+    run_balance_upsert merges them through decode.erc20_transfer_deltas,
+    the SAME exact-Decimal decode the fixture-side entries use.  Graded
+    against the identical one-pass oracle as eth_erc20_balances, so the
+    hash gate proves the standing pipeline is source-agnostic: chain-dump
+    micro-batches (stream_erc20_balance_upsert) and live-RPC log
+    micro-batches settle to the same ledger bit-for-bit.  max_blocks_per_batch=800 over the
     2,400-block fixture makes a REAL 3-generation merge in one drained
     query; cost per batch is one filtered eth_getLogs (no block bodies,
     no receipts — TestBalanceUpsertRpcTail pins the count)."""
-    from presto_ethereum_spark.sources.decode import (
-        erc20_transfer_deltas_from_logs,
-    )
     from presto_ethereum_spark.streaming.chain import (
         EthereumStreamDataSource,
         run_balance_upsert,
@@ -1343,12 +1342,7 @@ def stream_balance_rpc_tail(spark: SparkSession, sf: str) -> DataFrame:
         .option("max_blocks_per_batch", 800)
         .load()
     )
-    return run_balance_upsert(
-        spark,
-        "",
-        source=stream,
-        deltas_fn=erc20_transfer_deltas_from_logs,
-    )
+    return run_balance_upsert(spark, "", source=stream)
 
 
 @q("stream_balance_restart", _BALANCES_ORACLE)
@@ -1427,7 +1421,9 @@ def eth_balance_snapshot_merge(spark: SparkSession, sf: str) -> DataFrame:
     (token, holder) with map-side partials and the merge is a union of
     two already-aggregated tables — the snapshot leg is yesterday's
     materialization read back, not a rescan."""
-    d = _erc20_transfer_deltas(_eth_tables(spark).chain)
+    from presto_ethereum_spark.sources.decode import erc20_transfer_deltas
+
+    d = erc20_transfer_deltas(_eth_tables(spark).chain)
     mid = d.agg(
         F.floor(F.max("block_number") / 2).cast("long").alias("m")
     )
@@ -1592,12 +1588,47 @@ _U256_STREAM_ORACLE = f"""
     """
 
 
+def _u256_ledger(
+    d: DataFrame,
+    keys: list[str],
+    name: str,
+    count: str | None = None,
+    readout=None,
+) -> DataFrame:
+    """The batch u256 ledger read-out over signed limb deltas ``d``
+    (holder, l0..l4): drop the zero mint/burn holder, sum the five limbs
+    per ``keys`` (one hash aggregation, map-side partials), and render the
+    sums as ``name`` through ``readout`` (default the strict
+    u256_limb_sums_to_hex; partial-range ledgers pass the signed one).
+    ``count`` names an optional per-group leg count.  Output: ``keys``,
+    ``name``, ``count``."""
+    from presto_ethereum_spark.sources.decode import (
+        U256_LIMBS,
+        ZERO_ADDRESS,
+        u256_limb_sums_to_hex,
+    )
+
+    counts = [count] if count else []
+    s = (
+        d.where(F.col("holder") != ZERO_ADDRESS)
+        .groupBy(*keys)
+        .agg(
+            *[F.sum(n).alias(f"s{i}") for i, n in enumerate(U256_LIMBS)],
+            *[F.count("*").cast("long").alias(c) for c in counts],
+        )
+    )
+    sums = [F.col(f"s{i}") for i in range(5)]
+    return s.select(
+        *keys, (readout or u256_limb_sums_to_hex)(sums).alias(name), *counts
+    )
+
+
 @q("stream_u256_balance_upsert", _U256_STREAM_ORACLE)
 def stream_u256_balance_upsert(spark: SparkSession, sf: str) -> DataFrame:
     """The FULL-uint256 ledger as a STANDING PIPELINE: wire-log
-    micro-batches decode through erc20_transfer_deltas_u256 (5 signed
-    base-16^15 limbs, no magnitude guard) and foreachBatch-merge into
-    limb-sum state (streaming/chain.u256_state_spec) — per-limb addition
+    micro-batches decode to 5 signed base-16^15 limbs (no magnitude
+    guard) and foreachBatch-merge into limb-sum state
+    (streaming/chain.u256_state_spec) — per-limb addition
     is commutative/associative, so the settled state equals the one-pass
     batch ledger under ANY micro-batch split, with carry normalization
     applied ONCE at read-out.  This marries the round's two claims: the
@@ -1609,7 +1640,6 @@ def stream_u256_balance_upsert(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from presto_ethereum_spark.sources.decode import erc20_transfer_deltas_u256
     from presto_ethereum_spark.streaming import staged_stream
     from presto_ethereum_spark.streaming.chain import (
         run_balance_upsert,
@@ -1617,7 +1647,6 @@ def stream_u256_balance_upsert(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     logs = spark.read.parquet(str(ETH / "u256_logs.parquet"))
-    zero = "0x" + "0" * 40
     root = tempfile.mkdtemp(prefix="u256_stream_")
     try:
         src = staged_stream(logs, "blocknumber", 3, root)
@@ -1625,9 +1654,6 @@ def stream_u256_balance_upsert(spark: SparkSession, sf: str) -> DataFrame:
             spark,
             str(ETH / "u256_logs.parquet"),
             source=src,
-            deltas_fn=lambda df: erc20_transfer_deltas_u256(df).where(
-                F.col("holder") != zero
-            ),
             state_spec=u256_state_spec(),
         )
     finally:
@@ -1650,23 +1676,17 @@ def stream_u256_balance_restart(spark: SparkSession, sf: str) -> DataFrame:
     per-limb SUM; carry normalization happens once, at read-out, AFTER
     the resume).  Scale: recovery is one directory listing; steady-state
     per-batch work is identical to stream_u256_balance_upsert."""
-    from presto_ethereum_spark.sources.decode import erc20_transfer_deltas_u256
     from presto_ethereum_spark.streaming.chain import (
         run_balance_restart,
         u256_state_spec,
     )
 
-    zero = "0x" + "0" * 40
     return run_balance_restart(
         spark,
         str(ETH / "u256_logs.parquet"),
         split_ranges=4,
         kill_after=2,
-        deltas_fn=lambda df: erc20_transfer_deltas_u256(df).where(
-            F.col("holder") != zero
-        ),
         state_spec=u256_state_spec(),
-        block_col="blocknumber",
     )
 
 
@@ -1687,29 +1707,10 @@ def eth_erc20_balances_u256(spark: SparkSession, sf: str) -> DataFrame:
     zero mint/burn address is excluded from the ledger as on-chain
     convention.  Output is DECIMAL-free: the balance is the canonical
     0x + 64-hex string."""
-    from presto_ethereum_spark.sources.decode import (
-        erc20_transfer_deltas_u256,
-        u256_limb_sums_to_hex,
-    )
+    from presto_ethereum_spark.sources.decode import erc20_transfer_deltas_u256
 
-    logs = spark.read.parquet(str(ETH / "u256_logs.parquet"))
-    d = erc20_transfer_deltas_u256(logs)
-    s = (
-        d.where(F.col("holder") != "0x" + "0" * 40)
-        .groupBy("token_address", "holder")
-        .agg(
-            *[F.sum(f"l{i}").alias(f"s{i}") for i in range(5)],
-            F.count("*").cast("long").alias("n_transfers"),
-        )
-    )
-    return s.select(
-        "token_address",
-        "holder",
-        u256_limb_sums_to_hex([F.col(f"s{i}") for i in range(5)]).alias(
-            "balance_hex"
-        ),
-        "n_transfers",
-    )
+    d = erc20_transfer_deltas_u256(spark.read.parquet(str(ETH / "u256_logs.parquet")))
+    return _u256_ledger(d, ["token_address", "holder"], "balance_hex", "n_transfers")
 
 
 @q(
@@ -1735,25 +1736,10 @@ def eth_u256_top_holders(spark: SparkSession, sf: str) -> DataFrame:
     contract).  Plan: the one balance aggregation, then a per-token
     rank window (WindowGroupLimit-eligible top-k, partition count =
     token count); holder tie-break keeps the output deterministic."""
-    from presto_ethereum_spark.sources.decode import (
-        erc20_transfer_deltas_u256,
-        u256_limb_sums_to_hex,
-    )
+    from presto_ethereum_spark.sources.decode import erc20_transfer_deltas_u256
 
-    logs = spark.read.parquet(str(ETH / "u256_logs.parquet"))
-    d = erc20_transfer_deltas_u256(logs)
-    bal = (
-        d.where(F.col("holder") != "0x" + "0" * 40)
-        .groupBy("token_address", "holder")
-        .agg(*[F.sum(f"l{i}").alias(f"s{i}") for i in range(5)])
-        .select(
-            "token_address",
-            "holder",
-            u256_limb_sums_to_hex([F.col(f"s{i}") for i in range(5)]).alias(
-                "balance_hex"
-            ),
-        )
-    )
+    d = erc20_transfer_deltas_u256(spark.read.parquet(str(ETH / "u256_logs.parquet")))
+    bal = _u256_ledger(d, ["token_address", "holder"], "balance_hex")
     w = Window.partitionBy("token_address").orderBy(
         F.col("balance_hex").desc(), "holder"
     )
@@ -1867,32 +1853,15 @@ def eth_u256_balance_asof(spark: SparkSession, sf: str) -> DataFrame:
     group, as in the balances entry; holders funded only later are
     correctly ABSENT from earlier checkpoints (no zero-backfill —
     n_events counts contributing legs)."""
-    from presto_ethereum_spark.sources.decode import (
-        erc20_transfer_deltas_u256,
-        u256_limb_sums_to_hex,
-    )
+    from presto_ethereum_spark.sources.decode import erc20_transfer_deltas_u256
 
-    logs = spark.read.parquet(str(ETH / "u256_logs.parquet"))
-    d = erc20_transfer_deltas_u256(logs)
+    d = erc20_transfer_deltas_u256(spark.read.parquet(str(ETH / "u256_logs.parquet")))
     ck = spark.createDataFrame([(100,), (200,), (300,)], "asof_block long")
-    s = (
-        d.where(F.col("holder") != "0x" + "0" * 40)
-        .crossJoin(F.broadcast(ck))
-        .where(F.col("block_number") < F.col("asof_block"))
-        .groupBy("token_address", "holder", "asof_block")
-        .agg(
-            *[F.sum(f"l{i}").alias(f"s{i}") for i in range(5)],
-            F.count("*").cast("long").alias("n_events"),
-        )
+    d = d.crossJoin(F.broadcast(ck)).where(
+        F.col("block_number") < F.col("asof_block")
     )
-    return s.select(
-        "token_address",
-        "holder",
-        "asof_block",
-        u256_limb_sums_to_hex([F.col(f"s{i}") for i in range(5)]).alias(
-            "balance_hex"
-        ),
-        "n_events",
+    return _u256_ledger(
+        d, ["token_address", "holder", "asof_block"], "balance_hex", "n_events"
     )
 
 
@@ -1939,33 +1908,18 @@ def eth_u256_supply(spark: SparkSession, sf: str) -> DataFrame:
     events are a sliver of transfer volume), then one token-keyed
     aggregation."""
     from presto_ethereum_spark.sources.decode import (
-        hex_to_u256_limb_cols,
+        ZERO_ADDRESS,
+        erc20_transfers,
         u256_limb_sums_to_hex,
     )
-    from presto_ethereum_spark.sources.decode import (
-        TRANSFER_EVENT_TOPIC,
-        h32_to_h20_col,
-    )
 
-    zero = "0x" + "0" * 40
-    logs = spark.read.parquet(str(ETH / "u256_logs.parquet"))
-    limbs = hex_to_u256_limb_cols(F.col("data"))
-    tr = logs.where(
-        (F.lower(F.col("topics")[0]) == TRANSFER_EVENT_TOPIC)
-        & (F.size("topics") >= 3)
-        & (F.length("data") == 66)
-    ).select(
-        F.col("address").alias("token_address"),
-        h32_to_h20_col(F.col("topics")[1]).alias("from_addr"),
-        h32_to_h20_col(F.col("topics")[2]).alias("to_addr"),
-        *[limb.alias(f"l{i}") for i, limb in enumerate(limbs)],
-    )
+    tr = erc20_transfers(spark.read.parquet(str(ETH / "u256_logs.parquet")))
     legs = tr.where(
-        (F.col("from_addr") == zero) | (F.col("to_addr") == zero)
+        (F.col("from_addr") == ZERO_ADDRESS) | (F.col("to_addr") == ZERO_ADDRESS)
     ).select(
         "token_address",
-        F.when(F.col("from_addr") == zero, 1).otherwise(0).alias("is_mint"),
-        F.when(F.col("to_addr") == zero, 1).otherwise(0).alias("is_burn"),
+        F.when(F.col("from_addr") == ZERO_ADDRESS, 1).otherwise(0).alias("is_mint"),
+        F.when(F.col("to_addr") == ZERO_ADDRESS, 1).otherwise(0).alias("is_burn"),
         *[f"l{i}" for i in range(5)],
     )
     sign = (F.col("is_mint") - F.col("is_burn")).cast("decimal(38,0)")
@@ -2058,20 +2012,18 @@ def eth_u256_range_positions(spark: SparkSession, sf: str) -> DataFrame:
     logs = spark.read.parquet(str(ETH / "u256_logs.parquet")).where(
         F.col("blocknumber").between(150, 299)
     )
-    d = erc20_transfer_deltas_u256(logs)
-    s = (
-        d.where(F.col("holder") != "0x" + "0" * 40)
-        .groupBy("token_address", "holder")
-        .agg(
-            *[F.sum(f"l{i}").alias(f"s{i}") for i in range(5)],
-            F.count("*").cast("long").alias("n_transfers"),
-        )
+    s = _u256_ledger(
+        erc20_transfer_deltas_u256(logs),
+        ["token_address", "holder"],
+        "position_hex",
+        "n_transfers",
+        u256_limb_sums_to_signed_hex,
     )
-    pos = u256_limb_sums_to_signed_hex([F.col(f"s{i}") for i in range(5)])
+    pos = F.col("position_hex")
     return s.select(
         "token_address",
         "holder",
-        pos.alias("position_hex"),
+        "position_hex",
         F.when(pos.startswith("-"), F.lit(-1))
         .when(pos == "0x" + "0" * 64, F.lit(0))
         .otherwise(F.lit(1))
@@ -2187,7 +2139,9 @@ def eth_u256_balances_via_table(spark: SparkSession, sf: str) -> DataFrame:
     (token, holder) hash aggregation with map-side limb partials — the
     balance-family plan shape on the SQL-user surface."""
     from presto_ethereum_spark.sources.decode import (
+        U256_LIMBS,
         hex_to_u256_limb_cols,
+        ledger_legs,
         u256_limb_sums_to_signed_hex,
     )
     from presto_ethereum_spark.sources.rpc import EthereumDataSource
@@ -2205,37 +2159,19 @@ def eth_u256_balances_via_table(spark: SparkSession, sf: str) -> DataFrame:
     )
     limbs = hex_to_u256_limb_cols(F.col("erc20_value_hex"))
     tr = erc20.where(F.col("erc20_value_hex").isNotNull()).select(
-        "erc20_token",
-        "erc20_from",
-        "erc20_to",
-        *[limb.alias(f"l{i}") for i, limb in enumerate(limbs)],
+        F.col("erc20_token").alias("token_address"),
+        F.col("erc20_from").alias("from_addr"),
+        F.col("erc20_to").alias("to_addr"),
+        *[limb.alias(n) for n, limb in zip(U256_LIMBS, limbs)],
+        F.col("erc20_blocknumber").alias("block_number"),
     )
-    names = [f"l{i}" for i in range(5)]
-    d = tr.select(
-        "erc20_token", F.col("erc20_to").alias("holder"), *names
-    ).unionByName(
-        tr.select(
-            "erc20_token",
-            F.col("erc20_from").alias("holder"),
-            *[(-F.col(n)).alias(n) for n in names],
-        )
-    )
-    s = (
-        d.where(F.col("holder") != "0x" + "0" * 40)
-        .groupBy("erc20_token", "holder")
-        .agg(
-            *[F.sum(f"l{i}").alias(f"s{i}") for i in range(5)],
-            F.count("*").cast("long").alias("n_transfers"),
-        )
-    )
-    return s.select(
-        "erc20_token",
-        "holder",
-        u256_limb_sums_to_signed_hex(
-            [F.col(f"s{i}") for i in range(5)]
-        ).alias("position_hex"),
+    return _u256_ledger(
+        ledger_legs(tr, U256_LIMBS),
+        ["token_address", "holder"],
+        "position_hex",
         "n_transfers",
-    )
+        u256_limb_sums_to_signed_hex,
+    ).withColumnRenamed("token_address", "erc20_token")
 
 
 @q(
@@ -4534,8 +4470,9 @@ def eth_nonce_gaps(spark: SparkSession, sf: str) -> DataFrame:
 def eth_erc20_exact_flows(spark: SparkSession, sf: str) -> DataFrame:
     """EXACT token flows — the Decimal extension the survey's build plan
     reserves (SURVEY §7 "optional Decimal mode"): standard 3-topic
-    Transfer events decode their value hex to DECIMAL(38,0)
-    (decode.hex_to_decimal_col) and sum exactly — no double mantissa loss
+    Transfer events decode their value to DECIMAL(38,0) through the
+    ledger family's one Transfer decode (decode.erc20_transfers_decimal:
+    l1·2^60 + l0 from the JVM limb decode) and sum exactly — no double mantissa loss
     at any aggregation size, partition-order independent by construction.
     The oracle reassembles each value as hi*2^60 + lo HUGEINT chunks from
     the same hex.  Values needing > 120 bits are excluded by the
@@ -4545,30 +4482,12 @@ def eth_erc20_exact_flows(spark: SparkSession, sf: str) -> DataFrame:
     inconsistently (DuckDB pandas -> float64), and the base-10 string is
     the representation both engines agree on byte-for-byte
     (CORRECTNESS_r09's eth_erc20_balances hash finding)."""
-    from presto_ethereum_spark.sources.decode import hex_to_decimal_col
+    from presto_ethereum_spark.sources.decode import erc20_transfers_decimal
 
-    chain = _eth_tables(spark).chain
-    logs = chain.select(F.explode("transactions").alias("t")).select(
-        F.explode("t.logs").alias("l")
-    )
-    tr = logs.where(
-        (
-            F.lower(F.col("l.topics")[0])
-            == "0xddf252ad1be2c89b69c2b068fc378daa952ba7f163c4a11628f55a4df523b3ef"
-        )
-        & (F.size("l.topics") >= 3)
-        # standard single-field Transfer data only: fully-indexed events
-        # with multi-field data (ERC-721-ish) put the id in data and parse
-        # to values past Decimal(38) — outside the exact-mode contract
-        & (F.length("l.data") == 66)
-        & (F.substring(F.col("l.data"), 3, 34) == "0" * 34)
-    ).select(
-        F.col("l.address").alias("token_address"),
-        hex_to_decimal_col(F.col("l.data")).alias("wei_exact"),
-    )
+    tr = erc20_transfers_decimal(_eth_tables(spark).chain)
     return tr.groupBy("token_address").agg(
         F.count("*").alias("n_transfers"),
-        F.sum("wei_exact").cast("decimal(38,0)").cast("string").alias("total_wei_exact"),
+        F.sum("wei").cast("decimal(38,0)").cast("string").alias("total_wei_exact"),
     )
 
 

@@ -39,6 +39,11 @@ __all__ = [
     "hex_to_u256_limb_cols",
     "u256_limb_sums_to_hex",
     "u256_limb_sums_to_signed_hex",
+    "block_number_col",
+    "erc20_transfers",
+    "erc20_transfers_decimal",
+    "ledger_legs",
+    "erc20_transfer_deltas",
     "erc20_transfer_deltas_u256",
     "token_symbol_col",
     "truncate_varchar_bounds",
@@ -156,33 +161,6 @@ def hex_to_double_col(col: Column) -> Column:
     )
 
 
-def hex_to_decimal_col(col: Column) -> Column:
-    """EXACT-value extension (SURVEY §1.3 / §7: "optional Decimal mode"):
-    hex -> DECIMAL(38,0), widening the exact integer range from the
-    reference's double mantissa (2^53) to ~1.7e38.  True uint256 maxima
-    exceed Decimal(38) and decode to NULL — explicitly a narrower-but-
-    exact contract, vs the reference's wider-but-lossy double
-    (EthereumERC20Utils.java:8-14).  Unparseable hex -> NULL (the double
-    path's 0.0 fallback is for ERC-721 id-in-data events, which callers
-    of the exact path filter out beforehand)."""
-    from decimal import Decimal
-
-    from pyspark.sql.types import DecimalType
-
-    @F.pandas_udf(DecimalType(38, 0))
-    def _f(s):  # type: ignore[no-untyped-def]
-        def conv(x):
-            try:
-                v = int(x, 16)
-            except (TypeError, ValueError):
-                return None
-            return Decimal(v) if v < 10**38 else None
-
-        return s.map(conv)
-
-    return _f(col)
-
-
 U256_LIMB_BASE = 16**15  # 2^60: each limb exact in BIGINT/conv, 5 limbs = 2^256
 
 # 1-based (pos, len) slices over the lpad-64 hex body, LOW limb first:
@@ -191,6 +169,10 @@ U256_LIMB_BASE = 16**15  # 2^60: each limb exact in BIGINT/conv, 5 limbs = 2^256
 # render back to hex with 64-bit arithmetic only — no 256-bit type needed on
 # either engine (the DuckDB oracles use the same slices in HUGEINT).
 U256_LIMB_SLICES = [(50, 15), (35, 15), (20, 15), (5, 15), (1, 4)]
+U256_LIMBS = [f"l{i}" for i in range(5)]
+
+# mint source and burn sink of the Transfer ledger
+ZERO_ADDRESS = "0x" + "0" * 40
 
 
 def hex_to_u256_limb_cols(col: Column) -> list[Column]:
@@ -203,8 +185,7 @@ def hex_to_u256_limb_cols(col: Column) -> list[Column]:
     ledger deltas sum per-limb with map-side partials and re-normalize
     once per GROUP at read-out (u256_limb_sums_to_hex).  Unparseable or
     over-long hex -> all-NULL limbs (the exact path's honest failure;
-    callers filter wire shapes beforehand, as erc20_transfer_deltas_u256
-    does)."""
+    callers filter wire shapes beforehand, as erc20_transfers does)."""
     body = F.lower(F.substring(col, 3, 1 << 30))
     h = F.lpad(body, 64, "0")
     ok = body.rlike("^[0-9a-f]{1,64}$")
@@ -289,24 +270,37 @@ def u256_limb_sums_to_signed_hex(limbs: list[Column]) -> Column:
     ).when(is_neg, F.concat(F.lit("-"), neg_hex)).otherwise(pos_hex)
 
 
-def erc20_transfer_deltas_u256(logs: DataFrame) -> DataFrame:
-    """FULL-RANGE exact ledger-delta decode over the wire log shape
-    (address, topics array<string>, data, blocknumber) — the u256
-    successor to erc20_transfer_deltas_from_logs: same standard 3-topic
-    Transfer filter, but values decode to five exact base-16^15 limbs
-    with NO magnitude guard, so >2^120 transfers (excluded from the
-    DECIMAL(38,0) family by the leading-zero guard) are in scope.
-    Output: (token_address, holder, l0..l4 signed limb deltas, is_in,
-    block_number); aggregate with per-limb SUM (commutative, map-side
-    partial) and read out via u256_limb_sums_to_hex.
+def block_number_col(df: DataFrame) -> str:
+    """Block-number column of a Transfer source: ``number`` in the nested
+    chain shape (one row per block, embedded transactions and receipt
+    logs), ``blocknumber`` in the wire-log shape."""
+    return "number" if "transactions" in df.columns else "blocknumber"
 
-    The value word must be FULLY hex (ADVICE r12 #3): a right-length but
-    non-hex data word would decode to all-NULL limbs yet still count in
-    n_transfers/n_in/n_out — a silently inconsistent ledger row, and a
-    divergence from the DuckDB oracle whose CAST hard-errors on the same
-    input.  The rlike gate excludes it from the ledger entirely."""
+
+def erc20_transfers(df: DataFrame) -> DataFrame:
+    """The one exact ERC-20 Transfer decode of the ledger family
+    (EthereumRecordCursor.java:151-189, standard 3-topic events).  ``df``
+    is the nested chain shape or the wire-log shape (address, topics
+    array<string>, data, blocknumber) — what ``eth_getLogs`` returns and
+    the streaming source's table=log emits; its schema picks which.
+
+    One guard: the Transfer topic (case-insensitive), at least 3 topics,
+    and a value word of exactly ``0x`` + 64 hex digits after lowercasing.
+    A right-length but non-hex word is EXCLUDED (ADVICE r12 #3): decoded,
+    it would be a NULL-valued row that still counts as a transfer, and
+    the DuckDB oracles' CAST hard-errors on it.  Addresses narrow
+    h32->h20 as the connector decode does (EthereumRecordCursor.java:
+    433-435); the value decodes to five base-16^15 limbs in the JVM
+    (hex_to_u256_limb_cols).  Output: token_address, from_addr, to_addr,
+    l0..l4, block_number."""
+    if block_number_col(df) == "number":
+        df = (
+            df.select(F.explode("transactions").alias("t"))
+            .select(F.explode("t.logs").alias("l"))
+            .select("l.address", "l.topics", "l.data", "l.blocknumber")
+        )
     limbs = hex_to_u256_limb_cols(F.col("data"))
-    tr = logs.where(
+    return df.where(
         (F.lower(F.col("topics")[0]) == TRANSFER_EVENT_TOPIC)
         & (F.size("topics") >= 3)
         & F.lower(F.col("data")).rlike("^0x[0-9a-f]{64}$")
@@ -314,25 +308,74 @@ def erc20_transfer_deltas_u256(logs: DataFrame) -> DataFrame:
         F.col("address").alias("token_address"),
         h32_to_h20_col(F.col("topics")[1]).alias("from_addr"),
         h32_to_h20_col(F.col("topics")[2]).alias("to_addr"),
-        *[limb.alias(f"l{i}") for i, limb in enumerate(limbs)],
+        *[limb.alias(n) for n, limb in zip(U256_LIMBS, limbs)],
         F.col("blocknumber").alias("block_number"),
     )
-    names = [f"l{i}" for i in range(5)]
-    return tr.select(
+
+
+def erc20_transfers_decimal(df: DataFrame) -> DataFrame:
+    """:func:`erc20_transfers` under the EXACT-DECIMAL contract (SURVEY
+    §1.3 / §7: "optional Decimal mode"): values below 2^120 — ``l2 = l3 =
+    l4 = 0``, the value word's 34 leading zero digits — as ``wei = l1·2^60
+    + l0`` in DECIMAL(38,0), exact where the reference's double
+    (EthereumERC20Utils.java:8-14) is not.  Larger values are excluded on
+    both engines; :func:`erc20_transfer_deltas_u256` covers them.  Output:
+    token_address, from_addr, to_addr, wei, block_number."""
+    base = F.lit(U256_LIMB_BASE).cast("decimal(38,0)")
+    return (
+        erc20_transfers(df)
+        .where((F.col("l2") == 0) & (F.col("l3") == 0) & (F.col("l4") == 0))
+        .select(
+            "token_address",
+            "from_addr",
+            "to_addr",
+            (F.col("l1") * base + F.col("l0")).cast("decimal(38,0)").alias("wei"),
+            "block_number",
+        )
+    )
+
+
+def ledger_legs(transfers: DataFrame, values: list[str]) -> DataFrame:
+    """Two signed ledger rows per transfer: credit ``to_addr`` with the
+    ``values`` columns (is_in 1) and debit ``from_addr`` with their
+    negation (is_in 0).  ``transfers`` needs token_address, from_addr,
+    to_addr, ``values`` and block_number.  Output: token_address, holder,
+    ``values``, is_in, block_number."""
+    return transfers.select(
         "token_address",
         F.col("to_addr").alias("holder"),
-        *names,
+        *values,
         F.lit(1).alias("is_in"),
         "block_number",
     ).unionByName(
-        tr.select(
+        transfers.select(
             "token_address",
             F.col("from_addr").alias("holder"),
-            *[(-F.col(n)).alias(n) for n in names],
+            *[(-F.col(v)).alias(v) for v in values],
             F.lit(0).alias("is_in"),
             "block_number",
         )
     )
+
+
+def erc20_transfer_deltas(df: DataFrame) -> DataFrame:
+    """Exact DECIMAL(38,0) ledger deltas, shared by the balance family
+    (batch eth_erc20_balances / eth_balance_snapshot_merge and the
+    streaming balance upsert, over chain dumps or streamed wire logs
+    alike): token_address, holder, delta DECIMAL(38,0), is_in,
+    block_number."""
+    return ledger_legs(
+        erc20_transfers_decimal(df).withColumnRenamed("wei", "delta"), ["delta"]
+    )
+
+
+def erc20_transfer_deltas_u256(df: DataFrame) -> DataFrame:
+    """FULL-RANGE exact ledger deltas: the same decode with NO magnitude
+    bound, so >2^120 transfers (outside the DECIMAL(38,0) contract) are
+    in scope.  Output: token_address, holder, l0..l4 signed limb deltas,
+    is_in, block_number; aggregate with per-limb SUM (commutative,
+    map-side partial) and read out via u256_limb_sums_to_hex."""
+    return ledger_legs(erc20_transfers(df), U256_LIMBS)
 
 
 def token_symbol_col(address: Column) -> Column:
@@ -449,73 +492,5 @@ def erc20_from_chain(chain: DataFrame) -> DataFrame:
             hex_to_double_col(value_hex).alias("erc20_value"),
             F.col("l.transactionhash").alias("erc20_txhash"),
             F.col("l.blocknumber").alias("erc20_blocknumber"),
-        )
-    )
-
-
-def erc20_transfer_deltas(chain: DataFrame) -> DataFrame:
-    """Exact ledger-delta decode shared by the balance family (batch
-    eth_erc20_balances / eth_balance_snapshot_merge and the streaming
-    foreachBatch balance upsert): standard 3-topic Transfer events ->
-    two signed rows each (credit `to`, debit `from`), columns
-    (token_address, holder, delta DECIMAL(38,0), is_in, block_number).
-    Thin projection over :func:`erc20_transfer_deltas_from_logs` — the
-    chain-dump explode and the streamed raw-log table (streaming source
-    table=log) land on the SAME decode, so the balance pipeline is
-    source-agnostic by construction."""
-    logs = (
-        chain.select(F.explode("transactions").alias("t"))
-        .select(F.explode("t.logs").alias("l"))
-        .select(
-            F.col("l.address").alias("address"),
-            F.col("l.topics").alias("topics"),
-            F.col("l.data").alias("data"),
-            F.col("l.blockNumber").alias("blocknumber"),
-        )
-    )
-    return erc20_transfer_deltas_from_logs(logs)
-
-
-def erc20_transfer_deltas_from_logs(logs: DataFrame) -> DataFrame:
-    """Exact ledger-delta decode over the WIRE log shape — columns
-    (address, topics array<string>, data, blocknumber), exactly what
-    ``eth_getLogs`` returns and what the streaming source's table=log
-    emits.  Standard 3-topic Transfer events -> two signed rows each
-    (credit `to`, debit `from`), columns (token_address, holder,
-    delta DECIMAL(38,0), is_in, block_number).  Addresses narrow
-    h32->h20 as the connector decode does
-    (EthereumRecordCursor.java:433-435); the leading-zero guard keeps
-    values inside this variant's exact-DECIMAL(38,0) contract (>120-bit
-    values excluded on both engines — eth_erc20_exact_flows).  The guard
-    is RETIRED from the exact family as a whole: use
-    :func:`erc20_transfer_deltas_u256` (five base-16^15 limbs, no
-    magnitude bound, hex read-out) for full uint256 coverage; this
-    single-DECIMAL variant remains for consumers whose downstream
-    algebra needs one native numeric column."""
-    tr = logs.where(
-        (F.lower(F.col("topics")[0]) == TRANSFER_EVENT_TOPIC)
-        & (F.size("topics") >= 3)
-        & (F.length("data") == 66)
-        & (F.substring(F.col("data"), 3, 34) == "0" * 34)
-    ).select(
-        F.col("address").alias("token_address"),
-        h32_to_h20_col(F.col("topics")[1]).alias("from_addr"),
-        h32_to_h20_col(F.col("topics")[2]).alias("to_addr"),
-        hex_to_decimal_col(F.col("data")).alias("wei"),
-        F.col("blocknumber").alias("block_number"),
-    )
-    return tr.select(
-        "token_address",
-        F.col("to_addr").alias("holder"),
-        F.col("wei").alias("delta"),
-        F.lit(1).alias("is_in"),
-        "block_number",
-    ).unionByName(
-        tr.select(
-            "token_address",
-            F.col("from_addr").alias("holder"),
-            (-F.col("wei")).alias("delta"),
-            F.lit(0).alias("is_in"),
-            "block_number",
         )
     )

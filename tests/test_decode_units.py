@@ -406,37 +406,82 @@ class TestU256Limbs:
 
     def test_nonhex_right_length_data_excluded(self, spark):
         """ADVICE r12 #3: a right-length (66-char) but non-hex data word
-        must be EXCLUDED from the u256 ledger, not counted with all-NULL
-        limbs (which would inflate n_transfers while adding zero value —
-        and diverge from the oracle, whose CAST hard-errors)."""
-        from pyspark.sql import functions as F
-
+        must be EXCLUDED from both exact ledgers (u256 and DECIMAL), not
+        counted with NULL limbs or a NULL delta (which would inflate
+        n_transfers while adding zero value — and diverge from the
+        oracle, whose CAST hard-errors).  The DECIMAL words keep the 34
+        leading zero digits of its contract, so only the hex check can
+        drop the bad one."""
         from presto_ethereum_spark.constants import TRANSFER_EVENT_TOPIC
         from presto_ethereum_spark.sources.decode import (
+            erc20_transfer_deltas,
             erc20_transfer_deltas_u256,
         )
 
         h32 = lambda a: "0x" + a[2:].rjust(64, "0")  # noqa: E731
         a1, a2 = "0x" + "1" * 40, "0x" + "2" * 40
         tok = "0x" + "e" * 40
-        good = "0x" + "5" * 64
-        bad = "0x" + "g" * 64  # length 66, not hex
-        upper = "0x" + "A" * 64  # uppercase hex is VALID wire data
-        rows = [
-            (tok, [TRANSFER_EVENT_TOPIC, h32(a1), h32(a2)], good, 1),
-            (tok, [TRANSFER_EVENT_TOPIC, h32(a1), h32(a2)], bad, 2),
-            (tok, [TRANSFER_EVENT_TOPIC, h32(a1), h32(a2)], upper, 3),
-        ]
+        for decode, values, pad in (
+            (erc20_transfer_deltas_u256, [f"l{i}" for i in range(5)], ""),
+            (erc20_transfer_deltas, ["delta"], "0" * 34),
+        ):
+            n = 64 - len(pad)
+            good = "0x" + pad + "5" * n
+            bad = "0x" + pad + "g" * n  # length 66, not hex
+            upper = "0x" + pad + "A" * n  # uppercase hex is VALID wire data
+            rows = [
+                (tok, [TRANSFER_EVENT_TOPIC, h32(a1), h32(a2)], good, 1),
+                (tok, [TRANSFER_EVENT_TOPIC, h32(a1), h32(a2)], bad, 2),
+                (tok, [TRANSFER_EVENT_TOPIC, h32(a1), h32(a2)], upper, 3),
+            ]
+            logs = spark.createDataFrame(
+                rows,
+                "address string, topics array<string>, data string,"
+                " blocknumber long",
+            )
+            out = decode(logs).collect()
+            name = decode.__name__
+            # bad row dropped
+            assert {r.block_number for r in out} == {1, 3}, name
+            # surviving rows decode fully — no NULL-valued ledger rows
+            assert all(r[v] is not None for r in out for v in values), name
+
+    def test_decimal_ledger_boundary(self, spark):
+        """The DECIMAL ledger's contract ends at 2^120: 2^120 - 1 decodes
+        exactly, and a word whose 34th digit is nonzero (2^120) is absent
+        from the DECIMAL ledger but present, exactly, in the u256 one."""
+        from decimal import Decimal
+
+        from presto_ethereum_spark.constants import TRANSFER_EVENT_TOPIC
+        from presto_ethereum_spark.sources.decode import (
+            U256_LIMB_BASE,
+            erc20_transfer_deltas,
+            erc20_transfer_deltas_u256,
+        )
+
+        topics = [TRANSFER_EVENT_TOPIC, "0x" + "1" * 64, "0x" + "2" * 64]
         logs = spark.createDataFrame(
-            rows,
+            [
+                ("0x" + "e" * 40, topics, "0x" + "0" * 34 + "f" * 30, 1),
+                ("0x" + "e" * 40, topics, "0x" + "0" * 33 + "1" + "0" * 30, 2),
+            ],
             "address string, topics array<string>, data string,"
             " blocknumber long",
         )
-        out = erc20_transfer_deltas_u256(logs).collect()
-        assert {r.block_number for r in out} == {1, 3}  # bad row dropped
-        assert all(
-            all(r[f"l{i}"] is not None for i in range(5)) for r in out
-        )  # surviving rows decode fully — no NULL-limb ledger rows
+        dec = {
+            r.block_number: r.delta
+            for r in erc20_transfer_deltas(logs).collect()
+            if r.is_in
+        }
+        assert dec == {1: Decimal(2**120 - 1)}
+        u256 = {
+            r.block_number: sum(
+                int(r[f"l{i}"]) * U256_LIMB_BASE**i for i in range(5)
+            )
+            for r in erc20_transfer_deltas_u256(logs).collect()
+            if r.is_in
+        }
+        assert u256 == {1: 2**120 - 1, 2: 2**120}
 
     def test_via_table_ledger_exercises_signed_path(self, spark):
         """eth_u256_balances_via_table must (a) contain net-NEGATIVE

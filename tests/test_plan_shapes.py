@@ -399,7 +399,8 @@ def _chain_sql_wei_sql() -> str:
 def test_wei_conversions_start_no_python_worker(spark, chain_source):
     """fromWei/toWei are SQL functions inlined into the plan: neither the
     benchmark's wei query over the fixture views nor the battery's
-    fromWei entry may plan a Python evaluation node."""
+    fromWei entry may plan a Python evaluation node.  Nor may the DECIMAL
+    ledger entries, whose Transfer values decode from JVM limbs."""
     from presto_ethereum_spark.functions import register_udfs
 
     chain_source.register_views()
@@ -407,10 +408,34 @@ def test_wei_conversions_start_no_python_worker(spark, chain_source):
     wei = spark.sql(_chain_sql_wei_sql())._jdf.queryExecution().executedPlan()
     for name, plan in (
         ("WEI_SQL", wei.toString()),
-        ("eth_value_in_ether", _plan(spark, "eth_value_in_ether")),
+        *[
+            (name, _plan(spark, name))
+            for name in (
+                "eth_value_in_ether",
+                "eth_erc20_balances",
+                "eth_balance_snapshot_merge",
+                "eth_erc20_exact_flows",
+            )
+        ],
     ):
         assert not [n for n in PYTHON_EVAL if n in plan], f"{name}:\n{plan}"
     assert "/ 1.0E18" in wei.toString()  # the literal unit folded to its factor
+
+
+def test_eth_entries_share_one_fixture_source(spark):
+    """One fixture source per session: two entries built in it start from
+    the same erc20 DataFrame (its output attributes appear in both
+    analysed plans), not from a re-derived copy with new ones."""
+    import re
+
+    src = battery._eth_tables(spark)
+    assert battery._eth_tables(spark) is src
+    erc20 = src.table("erc20")
+    out = erc20._jdf.queryExecution().analyzed().output().toString()
+    attr = re.search(r"erc20_token#\d+", out).group()
+    for name in ("eth_token_flows", "eth_token_concentration"):
+        df = battery.queries()[name](spark, SF)
+        assert attr in df._jdf.queryExecution().analyzed().toString(), name
 
 
 def test_fixture_tables_derived_once(spark, chain_source):

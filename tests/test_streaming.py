@@ -1547,14 +1547,14 @@ class TestBalanceUpsert:
     commutative/associative), including the degenerate single-batch run."""
 
     def test_split_counts_match_batch(self, spark):
-        from presto_ethereum_spark.plans.battery import _erc20_transfer_deltas
+        from presto_ethereum_spark.sources.decode import erc20_transfer_deltas
         from presto_ethereum_spark.streaming.chain import run_balance_upsert
 
         from pyspark.sql import functions as F
 
         path = "fixtures/eth/chain_blocks.parquet"
         batch = (
-            _erc20_transfer_deltas(spark.read.parquet(path))
+            erc20_transfer_deltas(spark.read.parquet(path))
             .groupBy("token_address", "holder")
             .agg(
                 F.sum("is_in").cast("long").alias("n_in"),
@@ -1583,14 +1583,14 @@ class TestBalanceUpsert:
         from the batch ledger iff that block's transfers are lost."""
         from pyspark.sql import functions as F
 
-        from presto_ethereum_spark.plans.battery import _erc20_transfer_deltas
+        from presto_ethereum_spark.sources.decode import erc20_transfer_deltas
         from presto_ethereum_spark.streaming.chain import run_balance_upsert
 
         chain = spark.read.parquet("fixtures/eth/chain_blocks.parquet")
         # anchor the renumbering at the FIRST transfer-bearing block so the
         # resulting block 0 carries ledger deltas a dropped block would lose
         anchor = (
-            _erc20_transfer_deltas(chain)
+            erc20_transfer_deltas(chain)
             .agg(F.min("block_number"))
             .collect()[0][0]
         )
@@ -1601,12 +1601,12 @@ class TestBalanceUpsert:
         shifted.write.parquet(path)
         # sanity: the renumbered block 0 must itself carry transfers, or
         # the regression this test pins would be invisible
-        blk0 = _erc20_transfer_deltas(shifted.where(F.col("number") == 0))
+        blk0 = erc20_transfer_deltas(shifted.where(F.col("number") == 0))
         assert blk0.count() > 0
         want = sorted(
             map(
                 tuple,
-                _erc20_transfer_deltas(shifted)
+                erc20_transfer_deltas(shifted)
                 .groupBy("token_address", "holder")
                 .agg(
                     F.sum("is_in").cast("long").alias("n_in"),
@@ -1741,6 +1741,35 @@ class TestBalanceRestart:
         got = sorted(map(tuple, second.collect()))
         assert got == self._batch_ledger(spark)
         assert len(got) >= n_first
+
+    def test_crash_before_offset_commit_settles_to_oracle(self, spark, tmp_path):
+        """A crash after a generation write and before its offset commit:
+        with the last file in ``_chk/commits`` deleted, the rerun replays
+        that batch onto the generation before it, and the settled ledger
+        equals the one-pass DuckDB oracle."""
+        import os
+
+        import duckdb
+
+        from presto_ethereum_spark.plans import battery
+        from presto_ethereum_spark.streaming import staged_stream
+        from presto_ethereum_spark.streaming.chain import run_balance_upsert
+
+        chain = spark.read.parquet(self.CHAIN)
+        source = staged_stream(chain, "number", 3, str(tmp_path / "input"))
+        state = str(tmp_path / "state")
+        run_balance_upsert(spark, self.CHAIN, source=source, state_root=state)
+        commits = f"{state}/_chk/commits"
+        last = max((n for n in os.listdir(commits) if n.isdigit()), key=int)
+        assert last == "2"  # three splits, three committed batches
+        for name in (last, f".{last}.crc"):
+            if os.path.exists(f"{commits}/{name}"):
+                os.remove(f"{commits}/{name}")
+        got = run_balance_upsert(spark, self.CHAIN, source=source, state_root=state)
+        assert os.path.exists(f"{commits}/{last}")  # the replayed batch committed
+        oracle = duckdb.sql(battery.oracles()["stream_erc20_balance_upsert"])
+        assert got.columns == oracle.columns
+        assert sorted(map(tuple, got.collect())) == sorted(oracle.fetchall())
 
     def test_kill_after_bounds(self, spark):
         import pytest
