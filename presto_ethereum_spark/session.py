@@ -9,6 +9,7 @@ UTC session timezone so timestamp semantics are environment-independent.
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -59,6 +60,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    # local workers run `python -m` in this cwd with this PYTHONPATH; when
+    # they can import the package they fork with pandas loaded
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    paths += site.getsitepackages()
+    if master.startswith("local") and root in map(os.path.abspath, paths):
+        builder = builder.config(
+            "spark.python.daemon.module", "presto_ethereum_spark.worker_daemon"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
