@@ -19,12 +19,18 @@ expressed Spark-first:
 - plus large-scale training-data-pipeline operators (``operators.*``).
 """
 
-from presto_ethereum_spark.schemas import (
+from presto_ethereum_spark import zipcache
+
+# first, so every directory read below is stamped: Spark's Python workers
+# and planners import this package when they unpickle its code
+zipcache.install()
+
+from presto_ethereum_spark.schemas import (  # noqa: E402
     BLOCK_SCHEMA,
     ERC20_SCHEMA,
     TRANSACTION_SCHEMA,
 )
-from presto_ethereum_spark.session import get_spark, register_chain_views
+from presto_ethereum_spark.session import get_spark, register_chain_views  # noqa: E402
 
 __all__ = [
     "BLOCK_SCHEMA",

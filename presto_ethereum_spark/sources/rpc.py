@@ -48,6 +48,7 @@ Usage::
 from __future__ import annotations
 
 import json
+import weakref
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 
@@ -770,6 +771,10 @@ class EthereumPushdownDataSource(EthereumDataSource):
         return EthereumPushdownReader(dict(self.options), schema)
 
 
+# sessions ``read_ethereum_where`` has registered the ``ethereum`` format in
+_REGISTERED: weakref.WeakSet = weakref.WeakSet()
+
+
 def read_ethereum_where(spark, table: str, predicate: str, **options):
     """Driver-side OR-of-ranges pushdown: parse ``predicate`` (the string
     you would pass to ``.where``), transpose its OR/AND/BETWEEN/IN
@@ -780,12 +785,15 @@ def read_ethereum_where(spark, table: str, predicate: str, **options):
     NARROWS the scan (non-block predicates transpose to the full chain),
     and the post-scan ``where`` keeps semantics exact regardless.
 
-    Registers :class:`EthereumDataSource` if needed; extra ``options`` pass
-    through (``path``/``url``, ``blocks_per_partition``, ``logs_mode``...).
+    Registers :class:`EthereumDataSource` once per session (each
+    registration pickles the class); extra ``options`` pass through
+    (``path``/``url``, ``blocks_per_partition``, ``logs_mode``...).
     """
     from presto_ethereum_spark.plans.pushdown import ranges_option_from_sql
 
-    spark.dataSource.register(EthereumDataSource)
+    if spark not in _REGISTERED:
+        spark.dataSource.register(EthereumDataSource)
+        _REGISTERED.add(spark)
     reader = (
         spark.read.format("ethereum")
         .option("table", table)

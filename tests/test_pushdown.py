@@ -322,18 +322,33 @@ class TestSqlRangesRewrite:
         covered = sorted((p.start, p.end) for p in parts)
         assert covered == [(10, 59), (60, 109), (1000, 1049), (1050, 1099)]
 
-    def test_read_ethereum_where_end_to_end(self, spark):
-        from presto_ethereum_spark.sources.rpc import read_ethereum_where
+    def test_read_ethereum_where_end_to_end(self, spark, monkeypatch):
+        import weakref
+
+        from pyspark.sql.datasource import DataSourceRegistration
+
+        from presto_ethereum_spark.sources import rpc
         from tests.conftest import ETH_FIXTURES
 
+        registered = []
+        register = DataSourceRegistration.register
+        monkeypatch.setattr(
+            DataSourceRegistration,
+            "register",
+            lambda self, cls: registered.append(cls) or register(self, cls),
+        )
+        # as if no call had registered the format on this session yet
+        monkeypatch.setattr(rpc, "_REGISTERED", weakref.WeakSet())
         pred = (
             "block_number BETWEEN 10 AND 20 OR block_number BETWEEN 100 AND 110"
         )
-        df = read_ethereum_where(
-            spark, "block", pred, path=str(ETH_FIXTURES / "chain_blocks.parquet")
-        )
-        got = sorted(r["block_number"] for r in df.select("block_number").collect())
-        assert got == list(range(10, 21)) + list(range(100, 111))
+        for _ in range(2):
+            df = rpc.read_ethereum_where(
+                spark, "block", pred, path=str(ETH_FIXTURES / "chain_blocks.parquet")
+            )
+            got = sorted(r["block_number"] for r in df.select("block_number").collect())
+            assert got == list(range(10, 21)) + list(range(100, 111))
+        assert len(registered) == 1  # once per session
 
     def test_sql_view_drives_island_pruning(self, spark):
         """The SQL-first entry point: a registered view makes the
