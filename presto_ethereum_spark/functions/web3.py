@@ -224,11 +224,7 @@ class RpcBackend(ChainStateBackend):
 
     def _batch(self, method: str, addresses: pd.Series, block) -> list:
         tag = self._block_param(block)
-        calls = [
-            {"jsonrpc": "2.0", "id": i, "method": method, "params": [addr, tag]}
-            for i, addr in enumerate(addresses)
-        ]
-        return self.transport._post(calls)
+        return self.transport._call(method, [[addr, tag] for addr in addresses])
 
     def get_balance(self, addresses, block):
         res = self._batch("eth_getBalance", addresses, block)
@@ -247,9 +243,7 @@ class RpcBackend(ChainStateBackend):
         return pd.Series([r or "0x" for r in res], index=addresses.index)
 
     def gas_price(self):
-        [r] = self.transport._post(
-            [{"jsonrpc": "2.0", "id": 0, "method": "eth_gasPrice", "params": []}]
-        )
+        [r] = self.transport._call("eth_gasPrice", [[]])
         return float(int(r, 16))
 
     def block_number(self):

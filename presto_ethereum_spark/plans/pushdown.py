@@ -256,7 +256,16 @@ def _timestamp_range(f: Filter, get_timestamp, head: int) -> BlockRange:
 # predicate post-scan and the rewrite can only ever NARROW the scan, never
 # change results.
 
-_SQL_TOKEN = None  # built lazily
+# SQL comparison operator -> the pushFilters filter whose range mapping
+# (:func:`_number_ranges`) it shares
+_SQL_CMP_FILTERS = {
+    "=": EqualTo,
+    "==": EqualTo,
+    ">": GreaterThan,
+    ">=": GreaterThanOrEqual,
+    "<": LessThan,
+    "<=": LessThanOrEqual,
+}
 
 
 def _sql_tokens(pred: str) -> list[str]:
@@ -358,28 +367,16 @@ def ranges_from_sql(pred: str) -> list[BlockRange]:
         return _sql_cmp(col, op, v)
 
     def _sql_cmp(col, op, n):
-        if col not in BLOCK_NUMBER_COLUMNS:
-            if op in ("=", "==", ">", ">=", "<", "<=", "!=", "<>"):
-                return [FULL_CHAIN]
-            raise ValueError(f"unsupported operator {op!r}")
-        if not isinstance(n, int):
+        if col in BLOCK_NUMBER_COLUMNS and not isinstance(n, int):
             raise ValueError(f"non-integer comparison value on {col}: {n!r}")
-        if op in ("=", "=="):
-            return _upto(n, n)
-        if op == ">":
-            return [BlockRange(n + 1, OPEN_END)]
-        if op == ">=":
-            return [BlockRange(n, OPEN_END)]
-        if op == "<":
-            return _upto(1, n - 1)
-        if op == "<=":
-            return _upto(1, n)
-        if op in ("!=", "<>"):
+        if op not in _SQL_CMP_FILTERS and op not in ("!=", "<>"):
+            raise ValueError(f"unsupported operator {op!r}")
+        if col not in BLOCK_NUMBER_COLUMNS or op in ("!=", "<>"):
             # the complement of a point is (effectively) the full chain;
             # range-neutral like non-block columns — the post-scan
             # ``.where`` keeps semantics exact
             return [FULL_CHAIN]
-        raise ValueError(f"unsupported operator {op!r}")
+        return _number_ranges(_SQL_CMP_FILTERS[op]((col,), n))
 
     def factor():
         if peek() == "(":
@@ -409,8 +406,9 @@ def ranges_from_sql(pred: str) -> list[BlockRange]:
         raise ValueError(f"trailing tokens from {toks[pos]!r} in {pred!r}")
     # a single top-level term bypasses the OR/AND combiners, so normalize
     # here too: the documented contract is an ordered-disjoint empty-free
-    # list (e.g. "BETWEEN 10 AND 5" must come back [] — not [10,5])
-    return normalize_ranges(out)
+    # list (e.g. "BETWEEN 10 AND 5" must come back [] — not [10,5]) of
+    # valid blocks (>= 1), as ranges_from_filters returns
+    return intersect_range_lists([FULL_CHAIN], out)
 
 
 def ranges_option_from_sql(pred: str) -> str:

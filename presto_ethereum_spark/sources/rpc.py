@@ -1,4 +1,6 @@
-"""Live Ethereum source on the PySpark 4 Python DataSource API.
+"""Live Ethereum source on the PySpark 4 Python DataSource API, and the
+chain-read core every Ethereum reader shares (the ``ethereum-stream``
+readers and ``rescan_reorged`` in streaming/chain.py read through it too).
 
 The reference connector's execution shape (SURVEY.md §3):
 
@@ -14,19 +16,25 @@ Spark re-expression, with the round-trip economics fixed:
   driver:   ``pushFilters`` transposes predicates to a BlockRange
             (plans/pushdown.py — incl. the reference's planning-time
             hash->number and timestamp->number resolutions), then
-            ``partitions()`` chunks the range into ``blocks_per_partition``
-            blocks per InputPartition (default 200 vs the reference's 1 —
-            a Spark task is far heavier than a Presto split);
-  executor: ``read(partition)`` issues BATCHED JSON-RPC posts
-            (``rpc_batch_size`` blocks per POST, receipts batched
-            likewise) — >=100x fewer HTTP round-trips than the reference's
-            1 + |txs| per block; receipts are only fetched for the erc20
-            table and only for blocks that contain transactions (the
-            empty-receipt skip, EthereumLogLazyIterator.java:43-45);
+            ``partitions()`` cuts the range with ``block_partitions`` into
+            ``blocks_per_partition`` blocks per InputPartition (default 200
+            vs the reference's 1 — a Spark task is far heavier than a
+            Presto split);
+  executor: ``read(partition)`` runs ``table_rows``, which issues BATCHED
+            JSON-RPC posts (``rpc_batch_size`` blocks per POST, receipts
+            batched likewise) — >=100x fewer HTTP round-trips than the
+            reference's 1 + |txs| per block; receipts are only fetched for
+            the erc20 table and only for blocks that contain transactions
+            (the empty-receipt skip, EthereumLogLazyIterator.java:43-45);
             with ``logs_mode=eth_getLogs`` the erc20 table instead issues
             ONE filtered ``eth_getLogs`` per partition (Transfer topic,
             server-side) — no block bodies, no receipts: O(ranges) RPCs
             instead of O(blocks)+O(txs).
+
+The core has one implementation of each decision: ``ChainReadOptions``
+parses the options, ``block_partitions`` cuts a block range into
+partitions, ``table_rows`` turns a block range into rows of any table, and
+``HttpJsonRpcTransport._call`` builds every JSON-RPC request.
 
 Transports:
   - ``HttpJsonRpcTransport``: real JSON-RPC 2.0 batch client (hex-quantity
@@ -67,7 +75,9 @@ from presto_ethereum_spark.plans.pushdown import (
     parse_ranges_option,
     ranges_from_filters,
 )
+from presto_ethereum_spark.constants import TRANSFER_EVENT_TOPIC
 from presto_ethereum_spark.schemas import SCHEMAS, TABLES
+from presto_ethereum_spark.sources import pyrows
 
 DEFAULT_BLOCKS_PER_PARTITION = 200
 DEFAULT_RPC_BATCH = 50
@@ -186,93 +196,62 @@ class HttpJsonRpcTransport:
         by_id = {r["id"]: r.get("result") for r in out}
         return [by_id[c["id"]] for c in calls]
 
-    def block_number(self) -> int:
-        [r] = self._post(
-            [{"jsonrpc": "2.0", "id": 0, "method": "eth_blockNumber", "params": []}]
+    def _call(self, method: str, params_list: Sequence[list]) -> list:
+        """One JSON-RPC 2.0 batch POST calling ``method`` once per params
+        list; results come back in ``params_list`` order.  The one place a
+        request dict is built."""
+        return self._post(
+            [
+                {"jsonrpc": "2.0", "id": i, "method": method, "params": params}
+                for i, params in enumerate(params_list)
+            ]
         )
+
+    def block_number(self) -> int:
+        [r] = self._call("eth_blockNumber", [[]])
         return _hex_int(r)
 
     def block_number_by_hash(self, block_hash: str) -> int | None:
-        [r] = self._post(
-            [
-                {
-                    "jsonrpc": "2.0",
-                    "id": 0,
-                    "method": "eth_getBlockByHash",
-                    "params": [block_hash, False],
-                }
-            ]
-        )
+        [r] = self._call("eth_getBlockByHash", [[block_hash, False]])
         return _hex_int(r["number"]) if r else None
 
     def block_timestamp(self, number: int) -> int:
-        [r] = self._post(
-            [
-                {
-                    "jsonrpc": "2.0",
-                    "id": 0,
-                    "method": "eth_getBlockByNumber",
-                    "params": [hex(number), False],
-                }
-            ]
-        )
+        [r] = self._call("eth_getBlockByNumber", [[hex(number), False]])
         return _hex_int(r["timestamp"])
 
     def get_blocks(self, numbers: Sequence[int]) -> list[dict]:
         """Batched eth_getBlockByNumber(n, fullTx=True): one POST for the
         whole batch (vs one RPC per block, EthereumRecordSet.java:51)."""
-        calls = [
-            {
-                "jsonrpc": "2.0",
-                "id": i,
-                "method": "eth_getBlockByNumber",
-                "params": [hex(n), True],
-            }
-            for i, n in enumerate(numbers)
-        ]
-        return [self._wire_block(r) for r in self._post(calls) if r]
+        results = self._call(
+            "eth_getBlockByNumber", [[hex(n), True] for n in numbers]
+        )
+        return [self._wire_block(r) for r in results if r]
 
     def get_receipt_logs(self, tx_hashes: Sequence[str]) -> dict[str, list[dict]]:
         """Batched eth_getTransactionReceipt; returns tx_hash -> logs."""
-        calls = [
-            {
-                "jsonrpc": "2.0",
-                "id": i,
-                "method": "eth_getTransactionReceipt",
-                "params": [h],
-            }
-            for i, h in enumerate(tx_hashes)
-        ]
+        results = self._call("eth_getTransactionReceipt", [[h] for h in tx_hashes])
         return {
             h: [self._wire_log(lg) for lg in (r or {}).get("logs") or []]
-            for h, r in zip(tx_hashes, self._post(calls))
+            for h, r in zip(tx_hashes, results)
         }
 
     def get_logs(
-        self,
-        start: int,
-        end: int,
-        topic0: str | None = None,
-        addresses: list[str] | None = None,
+        self, start: int, end: int, topic0: str, addresses: list[str] | None = None
     ) -> list[dict]:
         """Bulk ``eth_getLogs`` over an inclusive block range: ONE filtered
         RPC replaces one ``eth_getTransactionReceipt`` per transaction (the
         reference's lazy per-tx cost model, EthereumLogLazyIterator.java:39-42)
         — at ~150 tx/block that is two-plus orders of magnitude fewer calls.
-        ``topic0`` (e.g. the ERC-20 Transfer signature) and ``addresses``
+        ``topic0`` (the ERC-20 Transfer signature) and ``addresses``
         (emitting token contracts) filter SERVER-side, so non-matching logs
         never cross the wire — "scan one token's transfers over the whole
         chain" costs the matching logs only.  Nodes match topics against
         the canonical lowercase hex; the client-side weird-event /
         case-insensitive decode still runs on what comes back."""
-        params: dict = {"fromBlock": hex(start), "toBlock": hex(end)}
-        if topic0 is not None:
-            params["topics"] = [topic0]
+        params = {"fromBlock": hex(start), "toBlock": hex(end), "topics": [topic0]}
         if addresses:
             params["address"] = list(addresses)
-        [r] = self._post(
-            [{"jsonrpc": "2.0", "id": 0, "method": "eth_getLogs", "params": [params]}]
-        )
+        [r] = self._call("eth_getLogs", [[params]])
         return [self._wire_log(lg) for lg in (r or [])]
 
     @staticmethod
@@ -430,11 +409,7 @@ class ParquetChainTransport:
         return {}
 
     def get_logs(
-        self,
-        start: int,
-        end: int,
-        topic0: str | None = None,
-        addresses: list[str] | None = None,
+        self, start: int, end: int, topic0: str, addresses: list[str] | None = None
     ) -> list[dict]:
         """eth_getLogs served from the embedded receipt logs.  A real node
         matches topics/addresses against canonical lowercase hex; mirrored
@@ -450,9 +425,7 @@ class ParquetChainTransport:
             for t in b["transactions"]:
                 for lg in t.get("logs") or []:
                     topics = lg.get("topics") or []
-                    if topic0 is not None and (
-                        not topics or topics[0].lower() != topic0.lower()
-                    ):
+                    if not topics or topics[0].lower() != topic0.lower():
                         continue
                     if addr_set is not None and (
                         (lg.get("address") or "").lower() not in addr_set
@@ -463,29 +436,23 @@ class ParquetChainTransport:
 
 
 def fetch_logs_adaptive(
-    transport,
-    start: int,
-    end: int,
-    topic0: str | None = None,
-    addresses: list[str] | None = None,
+    transport, start: int, end: int, addresses: list[str] | None = None
 ) -> Iterator[dict]:
     """Bulk getLogs with ADAPTIVE range splitting: production nodes cap
     eth_getLogs response sizes (Infura -32005 at 10k logs, geth response
     byte limits), so a dense range must bisect and retry rather than fail
     the Spark task.  Recursion floor is a single block — if ONE block's
-    logs exceed the node cap the error is real and propagates.  Shared by
-    the batch erc20 reader and the streaming erc20 tail (a stream that
+    logs exceed the node cap the error is real and propagates.  Batch and
+    stream reads alike come through :func:`table_rows` (a stream that
     cannot split would replay the identical failing range forever).
-    ``topic0`` defaults to the ERC-20 Transfer signature."""
-    if topic0 is None:
-        from presto_ethereum_spark.constants import TRANSFER_EVENT_TOPIC
-
-        topic0 = TRANSFER_EVENT_TOPIC
+    Filters on the ERC-20 Transfer topic."""
     stack = [(start, end)]
     while stack:
         lo, hi = stack.pop()
         try:
-            yield from transport.get_logs(lo, hi, topic0, addresses=addresses)
+            yield from transport.get_logs(
+                lo, hi, TRANSFER_EVENT_TOPIC, addresses=addresses
+            )
         except RpcError as e:
             if lo >= hi or not e.is_result_too_large():
                 raise
@@ -531,15 +498,22 @@ def make_transport(options: dict):
     return HttpJsonRpcTransport(url)
 
 
-def parse_logs_addresses(options: dict) -> list[str] | None:
-    """The comma-separated ``logs_address`` option as a list (None when
-    unset): the emitting token contracts eth_getLogs filters on."""
-    spec = options.get("logs_address")
-    return [a.strip() for a in spec.split(",") if a.strip()] if spec else None
+def table_option(options: dict) -> str:
+    return options.get("table", "block").lower()
+
+
+def positive_int_option(options: dict, name: str, default: int) -> int:
+    """A sizing option that must be >= 1: a zero or negative size would
+    plan no partitions, fetch no blocks or never advance a stream — a
+    wrong answer without an error."""
+    value = int(options.get(name, default))
+    if value < 1:
+        raise ValueError(f"{name} must be >= 1 (got {value})")
+    return value
 
 
 # ---------------------------------------------------------------------------
-# DataSource implementation
+# The chain-read core: one partition chunker, one row producer
 # ---------------------------------------------------------------------------
 
 
@@ -547,6 +521,112 @@ def parse_logs_addresses(options: dict) -> list[str] | None:
 class BlockRangePartition(InputPartition):
     start: int
     end: int  # inclusive
+
+
+def block_partitions(start: int, end: int, step: int) -> list[BlockRangePartition]:
+    """The inclusive range ``[start, end]`` cut into ``step``-block
+    partitions (vs 1 split/block, EthereumSplitManager.java:57-59); empty
+    when ``start > end``."""
+    return [
+        BlockRangePartition(lo, min(lo + step - 1, end))
+        for lo in range(start, end + 1, step)
+    ]
+
+
+def table_rows(
+    transport,
+    table: str,
+    start: int,
+    end: int,
+    columns: Sequence[str],
+    logs_mode: str = "receipts",
+    addresses: list[str] | None = None,
+    value_hex: bool = False,
+    rpc_batch: int = DEFAULT_RPC_BATCH,
+) -> Iterator[tuple]:
+    """Rows of ``table`` (``columns`` in order) for the INCLUSIVE block
+    range ``[start, end]``: the one row producer behind every chain reader,
+    batch and stream (RPC cost model in the module docstring).  ``erc20``
+    applies the reference-parity double decode per log, plus the exact
+    ``erc20_value_hex`` column when ``value_hex``; ``log`` (streaming only)
+    serves the wire log untouched for exact downstream decodes
+    (sources/decode.erc20_transfers)."""
+    if table == "log" or (table == "erc20" and logs_mode == "eth_getlogs"):
+        for lg in fetch_logs_adaptive(transport, start, end, addresses=addresses):
+            if table == "log":
+                yield tuple(lg.get(c) for c in columns)
+                continue
+            row = pyrows.erc20_row_from_log(lg, value_hex=value_hex)
+            if row is not None:
+                yield tuple(row[c] for c in columns)
+        return
+    for lo in range(start, end + 1, rpc_batch):
+        blocks = transport.get_blocks(list(range(lo, min(lo + rpc_batch, end + 1))))
+        if table == "erc20":
+            # one batched receipt call for the txs whose logs are not
+            # embedded (fixture blocks embed them)
+            txs = [
+                t for b in blocks for t in b["transactions"] if t.get("logs") is None
+            ]
+            if txs:
+                fetched = transport.get_receipt_logs([t["hash"] for t in txs])
+                for t in txs:
+                    t["logs"] = fetched.get(t["hash"], [])
+        for b in blocks:
+            if table == "block":
+                rows = [pyrows.block_row(b)]
+            elif table == "transaction":
+                rows = pyrows.transaction_rows(b)
+            else:
+                rows = pyrows.erc20_rows(b, value_hex=value_hex)
+            for row in rows:
+                yield tuple(row[c] for c in columns)
+
+
+class ChainReadOptions:
+    """The options every chain reader parses the same way: the batch
+    ``ethereum`` reader and both ``ethereum-stream`` readers.  Subclasses
+    set ``logs_mode`` and ``value_hex``, which :meth:`rows` passes on."""
+
+    logs_mode = "receipts"
+    value_hex = False
+
+    def __init__(self, options: dict, schema: StructType):
+        self.options = options
+        self.table = table_option(options)
+        self.columns = [f.name for f in schema.fields]
+        self.transport = make_transport(options)
+        self.blocks_per_partition = positive_int_option(
+            options, "blocks_per_partition", DEFAULT_BLOCKS_PER_PARTITION
+        )
+        self.rpc_batch = positive_int_option(
+            options, "rpc_batch_size", DEFAULT_RPC_BATCH
+        )
+        # comma-separated emitting token contracts eth_getLogs filters on
+        spec = options.get("logs_address")
+        self.logs_addresses = (
+            [a.strip() for a in spec.split(",") if a.strip()] if spec else None
+        )
+
+    def rows(self, start: int, end: int, transport=None) -> Iterator[tuple]:
+        """:func:`table_rows` for the inclusive range ``[start, end]`` with
+        this reader's options, over ``transport`` (default: its own)."""
+        return table_rows(
+            transport or self.transport,
+            self.table,
+            start,
+            end,
+            self.columns,
+            self.logs_mode,
+            self.logs_addresses,
+            self.value_hex,
+            self.rpc_batch,
+        )
+
+
+# ---------------------------------------------------------------------------
+# DataSource implementation
+# ---------------------------------------------------------------------------
 
 
 class EthereumDataSource(DataSource):
@@ -557,7 +637,7 @@ class EthereumDataSource(DataSource):
         return "ethereum"
 
     def schema(self) -> StructType:
-        table = self.options.get("table", "block").lower()
+        table = table_option(self.options)
         if table not in TABLES:
             raise ValueError(
                 f"Unknown table: {table!r} (expected block|transaction|erc20)"
@@ -589,7 +669,7 @@ class EthereumDataSource(DataSource):
         return EthereumReader(dict(self.options), schema)
 
 
-class EthereumReader(DataSourceReader):
+class EthereumReader(ChainReadOptions, DataSourceReader):
     """Reader with a STATIC scan range (``start_block``/``end_block``
     options).  Deliberately implements no ``pushFilters``: Spark 4.1 caches
     the planned (partitions, read function) inside the shared Table object of
@@ -601,15 +681,7 @@ class EthereumReader(DataSourceReader):
     """
 
     def __init__(self, options: dict, schema: StructType):
-        self.options = options
-        self.table = options.get("table", "block").lower()
-        self.schema = schema
-        self.columns = [f.name for f in schema.fields]
-        self.transport = make_transport(options)
-        self.blocks_per_partition = int(
-            options.get("blocks_per_partition", DEFAULT_BLOCKS_PER_PARTITION)
-        )
-        self.rpc_batch = int(options.get("rpc_batch_size", DEFAULT_RPC_BATCH))
+        super().__init__(options, schema)
         self.value_hex = options.get("value_mode", "double").lower() == "u256_hex"
         self.logs_mode = options.get("logs_mode", "receipts").lower()
         if self.logs_mode not in ("receipts", "eth_getlogs"):
@@ -617,7 +689,6 @@ class EthereumReader(DataSourceReader):
                 f"logs_mode must be 'receipts' or 'eth_getLogs' "
                 f"(got {options.get('logs_mode')!r})"
             )
-        self.logs_addresses = parse_logs_addresses(options)
         if self.logs_addresses and self.logs_mode != "eth_getlogs":
             raise ValueError(
                 "logs_address requires logs_mode=eth_getLogs (the receipts "
@@ -644,87 +715,30 @@ class EthereumReader(DataSourceReader):
     # -- planning (driver side) --------------------------------------------
 
     def partitions(self) -> list[BlockRangePartition]:
-        """Chunked block ranges (vs 1 split/block,
-        EthereumSplitManager.java:57-59) — the union over the ordered
-        range list, mirroring the reference's getOrderedRanges loop
-        (EthereumMetadata.java:190-199).  An open-ended range is capped at
-        the live chain head, mirroring :63-68."""
-        step = self.blocks_per_partition
+        """The union over the ordered range list of
+        ``blocks_per_partition``-block chunks, mirroring the reference's
+        getOrderedRanges loop (EthereumMetadata.java:190-199).  An
+        open-ended range is capped at the live chain head, mirroring
+        EthereumSplitManager.java:63-68."""
         out: list[BlockRangePartition] = []
         head: int | None = None
         for r in self.ranges:
-            start = max(1, r.start)
             end = r.end
             if end == OPEN_END:
                 if head is None:
                     head = self.transport.block_number()
                 end = head
-            if start > end:
-                continue
-            out.extend(
-                BlockRangePartition(lo, min(lo + step - 1, end))
-                for lo in range(start, end + 1, step)
-            )
+            out += block_partitions(max(1, r.start), end, self.blocks_per_partition)
         return out
 
     # -- execution (executor side) -----------------------------------------
 
     def read(self, partition: BlockRangePartition | None) -> Iterator[tuple]:
-        from presto_ethereum_spark.sources import pyrows
-
         if partition is None:
             # Spark schedules one task with a None partition when
             # partitions() returned an empty list (fully-pruned scan)
-            return
-        if self.table == "erc20" and self.logs_mode == "eth_getlogs":
-            # Bulk path: ONE filtered eth_getLogs per partition — no block
-            # bodies, no receipts.  RPC count is O(partitions) = O(ranges /
-            # blocks_per_partition), vs O(blocks) + O(txs) on the receipts
-            # path and 1 + |txs| per BLOCK in the reference
-            # (EthereumRecordSet.java:48-56, EthereumLogLazyIterator.java:39-42).
-            cols = self.columns
-            for lg in self._logs_adaptive(partition.start, partition.end):
-                row = pyrows.erc20_row_from_log(lg, value_hex=self.value_hex)
-                if row is not None:
-                    yield tuple(row[c] for c in cols)
-            return
-        numbers = list(range(partition.start, partition.end + 1))
-        cols = self.columns
-        for i in range(0, len(numbers), self.rpc_batch):
-            blocks = self.transport.get_blocks(numbers[i : i + self.rpc_batch])
-            if self.table == "erc20":
-                self._attach_logs(blocks)
-            for b in blocks:
-                if self.table == "block":
-                    row = pyrows.block_row(b)
-                    yield tuple(row[c] for c in cols)
-                elif self.table == "transaction":
-                    for row in pyrows.transaction_rows(b):
-                        yield tuple(row[c] for c in cols)
-                else:
-                    for row in pyrows.erc20_rows(b, value_hex=self.value_hex):
-                        yield tuple(row[c] for c in cols)
-
-    def _logs_adaptive(self, start: int, end: int) -> Iterator[dict]:
-        return fetch_logs_adaptive(
-            self.transport, start, end, addresses=self.logs_addresses
-        )
-
-    def _attach_logs(self, blocks: list[dict]) -> None:
-        """Lazy receipt fetch, erc20 only: skip blocks without transactions
-        (EthereumLogLazyIterator.java:43-45) and batch the receipt RPCs for
-        the rest.  Fixture blocks already embed logs (logs is a list)."""
-        pending = [
-            t
-            for b in blocks
-            for t in b["transactions"]
-            if t.get("logs") is None
-        ]
-        if not pending:
-            return
-        fetched = self.transport.get_receipt_logs([t["hash"] for t in pending])
-        for t in pending:
-            t["logs"] = fetched.get(t["hash"], [])
+            return iter(())
+        return self.rows(partition.start, partition.end)
 
 
 class EthereumPushdownReader(EthereumReader):

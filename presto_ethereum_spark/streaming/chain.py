@@ -8,7 +8,11 @@ of the ``block`` table.
 
 Offsets are plain block numbers ({"next": n}), so restart/replay semantics
 are exact: ``readBetweenOffsets`` re-serves any committed range
-deterministically from the transport.
+deterministically from the transport.  Both readers take the batch
+source's option parse, partition chunker and row producer
+(sources/rpc.ChainReadOptions, block_partitions, table_rows), so a stream
+reads a block range with the same RPCs as a batch scan; ``erc20`` and
+``log`` always tail through bulk eth_getLogs.
 
 Two reader modes, selected by ``reader_mode``:
 
@@ -17,7 +21,7 @@ Two reader modes, selected by ``reader_mode``:
   (~1 block / 13 s on mainnet);
 - ``partitioned``: :class:`DataSourceStreamReader` — ``latestOffset``
   advances up to ``max_blocks_per_batch`` per trigger and ``partitions``
-  splits the batch range into ``blocks_per_partition`` chunks read ON
+  cuts the batch range into ``blocks_per_partition`` chunks read ON
   EXECUTORS in parallel.  This is the catch-up path: restart a monitor N
   days behind head and the backfill saturates the cluster instead of the
   driver, then drains to the same one-block cadence as ``simple``.
@@ -41,7 +45,6 @@ from collections.abc import Iterator
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
-    InputPartition,
     SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import (
@@ -53,7 +56,15 @@ from pyspark.sql.types import (
 )
 
 from presto_ethereum_spark.schemas import SCHEMAS
-from presto_ethereum_spark.sources.rpc import make_transport, parse_logs_addresses
+from presto_ethereum_spark.sources.rpc import (
+    BlockRangePartition,
+    ChainReadOptions,
+    block_partitions,
+    make_transport,
+    positive_int_option,
+    table_option,
+    table_rows,
+)
 from presto_ethereum_spark.streaming import (
     drain,
     fold_generations,
@@ -85,13 +96,16 @@ def _stream_schema(table: str) -> StructType:
     return SCHEMAS[table]
 
 
-class _ChainStreamOptions:
-    """Options and initial offset shared by both stream readers."""
+class _ChainStreamOptions(ChainReadOptions):
+    """The batch reader's option parse plus the stream-only options, the
+    initial offset and the batch-end rule shared by both stream readers."""
+
+    logs_mode = "eth_getlogs"
 
     def __init__(self, options: dict):
-        self.transport = make_transport(options)
+        super().__init__(options, _stream_schema(table_option(options)))
         self.start_block = int(options.get("start_block", 1))
-        self.max_per_batch = int(options.get("max_blocks_per_batch", 100))
+        self.max_per_batch = positive_int_option(options, "max_blocks_per_batch", 100)
         # Confirmation depth: never ingest blocks above head - k.  Blocks
         # near head can still reorg; once an offset commits, the micro-batch
         # is never re-read, so an orphaned block's rows would be permanently
@@ -101,94 +115,47 @@ class _ChainStreamOptions:
         self.confirmations = int(options.get("confirmations", 0))
         if self.confirmations < 0:
             raise ValueError("confirmations must be >= 0")
-        self.table = options.get("table", "block").lower()
-        self.logs_addresses = parse_logs_addresses(options)
-        self.columns = [f.name for f in _stream_schema(self.table).fields]
 
     def initialOffset(self) -> dict:
         return {"next": self.start_block}
 
+    def _batch_end(self, lo: int) -> int:
+        """Exclusive end of the micro-batch starting at ``lo``: at most
+        ``max_blocks_per_batch`` blocks, none above head - confirmations
+        (at or below ``lo`` when there is nothing to read)."""
+        head = self.transport.block_number()
+        return min(head + 1 - self.confirmations, lo + self.max_per_batch)
+
 
 class EthereumStreamReader(_ChainStreamOptions, SimpleDataSourceStreamReader):
-    def _rows(self, lo: int, hi: int) -> list[tuple]:
-        # a LIST, not a generator: Spark's simple-stream wrapper pickles the
-        # prefetched batch to serve readBetweenOffsets replays
-        return _table_rows(
-            self.transport, self.table, lo, hi - 1, self.columns,
-            self.logs_addresses,
-        )
-
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         lo = start["next"]
-        head = self.transport.block_number()
-        hi = min(head + 1 - self.confirmations, lo + self.max_per_batch)
+        hi = self._batch_end(lo)
         if hi <= lo:
             # caught up: the wrapper probes this with next() (expects an
             # ITERATOR raising StopIteration); non-empty batches below must
             # instead be a picklable LIST for the prefetch cache
             return iter(()), start
-        return self._rows(lo, hi), {"next": hi}
+        return list(self.rows(lo, hi - 1)), {"next": hi}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         # executor-side replay path validates for an iterator, not a list
-        return iter(self._rows(start["next"], end["next"]))
-
-    def commit(self, end: dict) -> None:
-        pass  # transports are stateless; nothing to clean up
-
-
-def _table_rows(
-    transport, table: str, start: int, end: int, columns, addresses=None
-) -> list[tuple]:
-    """Rows of ``table`` for an INCLUSIVE block range.  ``block`` fetches
-    block bodies; ``erc20`` and ``log`` ride the bulk eth_getLogs path
-    (one filtered RPC per range, server-side Transfer topic + optional
-    token addresses — the cheap way to TAIL a token's transfers live).
-    ``erc20`` applies the reference-parity double decode per log; ``log``
-    serves the wire shape untouched for exact downstream decodes
-    (sources/decode.erc20_transfers)."""
-    from presto_ethereum_spark.sources import pyrows
-
-    out: list[tuple] = []
-    if table in ("erc20", "log"):
-        from presto_ethereum_spark.sources.rpc import fetch_logs_adaptive
-
-        # adaptive bisection, same as the batch path: a stream that cannot
-        # split a capped range would replay the identical failure forever
-        for lg in fetch_logs_adaptive(transport, start, end, addresses=addresses):
-            if table == "log":
-                out.append(tuple(lg.get(c) for c in columns))
-                continue
-            row = pyrows.erc20_row_from_log(lg)
-            if row is not None:
-                out.append(tuple(row[c] for c in columns))
-        return out
-    for b in transport.get_blocks(list(range(start, end + 1))):
-        row = pyrows.block_row(b)
-        out.append(tuple(row[c] for c in columns))
-    return out
-
-
-class ChainBatchPartition(InputPartition):
-    def __init__(self, start: int, end: int):  # inclusive range
-        self.start, self.end = start, end
+        return self.rows(start["next"], end["next"] - 1)
 
 
 class EthereumPartitionedStreamReader(_ChainStreamOptions, DataSourceStreamReader):
     """Executor-side chain reader for high-rate catch-up.
 
     The driver only polls the head and cuts offsets; each micro-batch's
-    block range is split into ``blocks_per_partition`` chunks that fetch +
-    decode ON EXECUTORS — the same parallelism story as the batch source
-    (sources/rpc.py), applied per trigger.  Offsets are identical to the
-    simple reader ({"next": n}), so a checkpoint can survive a mode switch.
+    block range is cut into ``blocks_per_partition`` chunks by the batch
+    source's chunker (sources/rpc.block_partitions), and each chunk
+    fetches + decodes ON EXECUTORS through the same row producer
+    (sources/rpc.table_rows) — the batch source's parallelism, applied per
+    trigger.  Offsets are identical to the simple reader ({"next": n}), so
+    a checkpoint can survive a mode switch.
     """
 
-    def __init__(self, options: dict):
-        super().__init__(options)  # self.transport: driver head polls only
-        self.options = options
-        self.blocks_per_partition = int(options.get("blocks_per_partition", 200))
-        self._last: dict | None = None
+    _last: dict | None = None  # highest offset seen (see latestOffset)
 
     def _raise_floor(self, n: int) -> None:
         if self._last is None or n > self._last["next"]:
@@ -203,31 +170,22 @@ class EthereumPartitionedStreamReader(_ChainStreamOptions, DataSourceStreamReade
         # offset that goes backward would silently re-read committed
         # blocks: dict offsets compare by equality, not order).
         lo = self._last["next"] if self._last else self.start_block
-        head = self.transport.block_number()
-        hi = min(head + 1 - self.confirmations, lo + self.max_per_batch)
-        self._last = {"next": max(lo, hi)}
+        self._last = {"next": max(lo, self._batch_end(lo))}
         return self._last
 
-    def partitions(self, start: dict, end: dict) -> list[ChainBatchPartition]:
+    def partitions(self, start: dict, end: dict) -> list[BlockRangePartition]:
         # learn the restart position: the first post-recovery call carries
         # the checkpoint's committed offset as `start`
         self._raise_floor(start["next"])
         self._raise_floor(end["next"])
-        lo, hi = start["next"], end["next"] - 1  # inclusive
-        step = self.blocks_per_partition
-        return [
-            ChainBatchPartition(a, min(a + step - 1, hi))
-            for a in range(lo, hi + 1, step)
-        ]
+        return block_partitions(
+            start["next"], end["next"] - 1, self.blocks_per_partition
+        )
 
-    def read(self, partition: ChainBatchPartition) -> Iterator[tuple]:
+    def read(self, partition: BlockRangePartition) -> Iterator[tuple]:
         # runs on the EXECUTOR: fresh transport per task, like the batch
         # source's read path
-        transport = make_transport(self.options)
-        yield from _table_rows(
-            transport, self.table, partition.start, partition.end,
-            self.columns, self.logs_addresses,
-        )
+        return self.rows(partition.start, partition.end, make_transport(self.options))
 
     def commit(self, end: dict) -> None:
         # stateless transports — but the recovery path calls commit with
@@ -242,7 +200,7 @@ class EthereumStreamDataSource(DataSource):
         return "ethereum-stream"
 
     def schema(self) -> StructType:
-        table = self.options.get("table", "block").lower()
+        table = table_option(self.options)
         if table not in ("block", "erc20", "log"):
             raise ValueError(
                 f"ethereum-stream serves table=block|erc20|log (got {table!r});"
@@ -340,24 +298,14 @@ def rescan_reorged(spark, ingested, options: dict, depth: int = 64):
     """
     from pyspark.sql import functions as F
 
-    from presto_ethereum_spark.sources import pyrows
-
     hi = ingested.agg(F.max("block_number").alias("m")).collect()[0]["m"]
     schema = "block_number long, ingested_hash string, chain_hash string"
     if hi is None:
         return spark.createDataFrame([], schema)
     lo = max(1, int(hi) - depth + 1)
     transport = make_transport(options)
-    cur = spark.createDataFrame(
-        [
-            (int(r["block_number"]), r["block_hash"])
-            for r in (
-                pyrows.block_row(b)
-                for b in transport.get_blocks(list(range(lo, int(hi) + 1)))
-            )
-        ],
-        "block_number long, chain_hash string",
-    )
+    rows = table_rows(transport, "block", lo, int(hi), ["block_number", "block_hash"])
+    cur = spark.createDataFrame(list(rows), "block_number long, chain_hash string")
     return (
         ingested.where(F.col("block_number").between(lo, hi))
         .select("block_number", F.col("block_hash").alias("ingested_hash"))

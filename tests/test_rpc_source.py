@@ -100,6 +100,27 @@ def test_unknown_table_errors(registered):
         ).load().count()
 
 
+@pytest.mark.parametrize("value", [0, -1])
+@pytest.mark.parametrize(
+    "option", ["blocks_per_partition", "rpc_batch_size", "max_blocks_per_batch"]
+)
+def test_sizing_option_below_one_raises(option, value):
+    """A size below 1 would plan no partitions, fetch no blocks or never
+    advance a stream; every reader that takes the option rejects it."""
+    from presto_ethereum_spark.streaming.chain import (
+        EthereumPartitionedStreamReader,
+        EthereumStreamReader,
+    )
+
+    opts = {"table": "block", "path": CHAIN, option: value}
+    readers = [EthereumStreamReader, EthereumPartitionedStreamReader]
+    if option != "max_blocks_per_batch":  # a stream-only option
+        readers.append(lambda o: EthereumReader(o, EthereumDataSource(o).schema()))
+    for make in readers:
+        with pytest.raises(ValueError, match=f"{option} must be >= 1"):
+            make(opts)
+
+
 class TestReaderPlanning:
     def make_reader(self, **options):
         opts = {"table": "block", "path": CHAIN, **options}

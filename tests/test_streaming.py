@@ -151,6 +151,36 @@ def test_chain_stream_resumes_from_offset(spark):
     assert list(rows2) == [] and nxt2 == {"next": 2401}
 
 
+def test_block_stream_posts_rpc_batch_blocks_per_call(monkeypatch):
+    """Stream block reads post at most rpc_batch_size blocks per
+    get_blocks, as batch reads do, in both reader modes."""
+    from presto_ethereum_spark.sources.rpc import ParquetChainTransport
+    from presto_ethereum_spark.streaming import chain
+
+    class Recording(ParquetChainTransport):
+        def __init__(self, path):
+            super().__init__(path)
+            self.sizes = []
+
+        def get_blocks(self, numbers):
+            self.sizes.append(len(numbers))
+            return super().get_blocks(numbers)
+
+    opts = {"path": CHAIN, "max_blocks_per_batch": 120, "rpc_batch_size": 50}
+    simple = chain.EthereumStreamReader(opts)
+    simple.transport = Recording(CHAIN)
+    rows, nxt = simple.read(simple.initialOffset())
+    assert len(rows) == 120 and nxt == {"next": 121}
+    assert simple.transport.sizes == [50, 50, 20]
+
+    partitioned = chain.EthereumPartitionedStreamReader(opts)
+    executor_side = Recording(CHAIN)
+    monkeypatch.setattr(chain, "make_transport", lambda options: executor_side)
+    [part] = partitioned.partitions({"next": 1}, partitioned.latestOffset())
+    assert len(list(partitioned.read(part))) == 120
+    assert executor_side.sizes == [50, 50, 20]
+
+
 def test_windowed_counts_match_batch(spark):
     sf_dir = "/root/testdata/sf0.001"
     streamed = run_windowed_counts(spark, sf_dir, window="1 hour")
@@ -751,8 +781,11 @@ def test_erc20_stream_bisects_capped_ranges(spark, monkeypatch):
     """The streaming erc20 tail must split node-capped getLogs ranges like
     the batch path (a stream that cannot split replays the same failing
     range forever)."""
-    from presto_ethereum_spark.sources.rpc import ParquetChainTransport, RpcError
-    from presto_ethereum_spark.streaming.chain import _table_rows
+    from presto_ethereum_spark.sources.rpc import (
+        ParquetChainTransport,
+        RpcError,
+        table_rows,
+    )
     from presto_ethereum_spark.schemas import SCHEMAS
 
     inner = ParquetChainTransport("fixtures/eth/chain_blocks.parquet")
@@ -767,7 +800,7 @@ def test_erc20_stream_bisects_capped_ranges(spark, monkeypatch):
 
     inner.get_logs = capped
     cols = [f.name for f in SCHEMAS["erc20"].fields]
-    rows = _table_rows(inner, "erc20", 1, 400, cols)
+    rows = list(table_rows(inner, "erc20", 1, 400, cols, "eth_getlogs"))
     golden = spark.read.parquet("fixtures/eth/erc20.parquet").where(
         "erc20_blocknumber BETWEEN 1 AND 400"
     )
